@@ -5,10 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession, Row, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 import graft.core.{Metric, GraphIndex, VamanaIndex, HnswIndex, VectorOps,
   DiskannFormat, HnswFormat, LshCodec, Sq8Codec}
-import graft.functions.{toFloatVec, array_distance_sq, array_negative_inner_product,
-  array_cosine_similarity}
+import graft.functions.{toFloatVec, floatVec, array_distance_sq,
+  array_negative_inner_product, array_cosine_similarity}
 
 /**
  * Distributed ANN index build/search — the Spark-native re-expression of the
@@ -27,9 +28,9 @@ import graft.functions.{toFloatVec, array_distance_sq, array_negative_inner_prod
  *  - Row fetch-back uses an `isin` pushdown filter on the id column (a k-row
  *    literal reaches the parquet scan) + a broadcast join for `_distance` —
  *    the 100 TB-safe analog of the reference's rowid `DataTable::Fetch`.
- *  - Engines: `diskann` (Vamana graph), `flat` (exact scan, Spark-native
- *    TakeOrderedAndProject), `ivfflat` (sampled k-means centroids + parquet
- *    partitioned by cluster id → nprobe partition pruning).
+ *  - Engines: the [[Engine]] families — graph shards (diskann, hnsw), exact
+ *    scans (flat, ivfflat: k-means centroids + parquet partitioned by cluster
+ *    id → nprobe partition pruning) and code tables (pq, ivfpq, ivfsq, lsh).
  *
  * Distances surfaced follow the reference engine: L2 is *squared* L2, IP is
  * the negated dot product, cosine is the negated cosine (lower = closer;
@@ -38,7 +39,7 @@ import graft.functions.{toFloatVec, array_distance_sq, array_negative_inner_prod
 object Ann {
 
   case class BuildParams(
-      engine: String = "diskann",          // diskann | hnsw | flat | ivfflat | pq
+      engine: String = "diskann",          // an Engine name (see Engine.all)
       metric: String = "l2",               // l2 | ip | cosine
       maxDegree: Int = VamanaIndex.DefaultMaxDegree,
       buildComplexity: Int = VamanaIndex.DefaultBuildComplexity,
@@ -103,12 +104,6 @@ object Ann {
       // deterministic build.
       buildThreads: Int = 1)
 
-  /** Engines whose shards are graph files searched via ShardCache (hnsw
-   *  reuses the diskann shard lifecycle; its IndexMeta stores m in
-   *  `maxDegree` and efConstruction in `buildComplexity`). */
-  private[graft] def isGraphEngine(engine: String): Boolean =
-    engine == "diskann" || engine == "hnsw"
-
   def root(spark: SparkSession): String =
     IndexCatalog.rootDir(k => spark.conf.getOption(k))
 
@@ -116,13 +111,15 @@ object Ann {
    * FAISS-style `index_factory` description string → BuildParams
    * (reference passes factory strings through FaissParams,
    * src/include/faiss_index.hpp:37-113). Supported grammar:
-   * `Flat` | `HNSW[m]` | `IVF<nlist>,Flat` | `IVF<nlist>,PQ<m>` |
+   * `Flat` | `HNSW[m]` | `IVF<nlist>[,Flat]` | `IVF<nlist>,PQ<m>` |
    * `IVF<nlist>_HNSW<m>[,Flat|,PQ<m>]` (HNSW coarse quantizer) |
    * `DiskANN[degree]` | `PQ<m>` | `OPQ<m>,PQ<m>` |
    * `OPQ<m>,IVF<n>[_HNSW<g>],PQ<m>` | `OPQ<m>,IMI2x<b>,PQ<m>` |
-   * `LSH[nbits]`, each
-   * optionally suffixed `,SQ8`/`,SQ4`/`,SQ6` (diskann only) or `,RFlat`
-   * (code engines: PQ/IVFPQ/LSH).
+   * `IMI2x<b>[,Flat]` | `IMI2x<b>,PQ<m>` | `PCA[R|W]<d>,Flat` |
+   * `PCA[R|W]<d>,IVF<nlist>[,Flat|,PQ<m>]` | `LSH[nbits][r|t|rt]`, each
+   * optionally suffixed `,SQ8`/`,SQ4`/`,SQ6` (diskann, or plain
+   * `IVF<nlist>[_HNSW<m>]` → the ivfsq engine) or `,RFlat` (code engines:
+   * PQ/IVFPQ/IVFSQ/LSH).
    */
   def parseFactory(desc: String, base: BuildParams = BuildParams()): BuildParams = {
     val parts = desc.trim.split(",").map(_.trim).filter(_.nonEmpty)
@@ -279,26 +276,23 @@ object Ann {
       // QT_8bit/QT_4bit/QT_6bit, by_residual=false): inverted lists over
       // scalar-quantized codes — a distinct engine (the diskann SQ suffix
       // quantizes graph-shard storage instead); SQ4/SQ6 pack sub-byte rows
-      case Some(q) if p.engine == "ivfflat" && p.imiB == 0 && p.pcaDim == 0 =>
+      case Some(q) if Engine(p.engine) == Engine.IvfFlat && p.imiB == 0 && p.pcaDim == 0 =>
         p.copy(engine = "ivfsq", quantization = q)
       case Some(q) =>
-        require(p.engine == "diskann",
+        require(Engine(p.engine) == Engine.Diskann,
           s"${q.toUpperCase} requires the diskann or IVF engine " +
           "(IMI/PCA+SQ chains are not implemented)")
         p.copy(quantization = q)
       case None => p
     }
     if (refine) {
-      require(p2.engine == "pq" || p2.engine == "ivfpq" || p2.engine == "lsh" ||
-        p2.engine == "ivfsq",
+      require(Engine(p2.engine).codes != Engine.Codes.Raw,
         "RFlat refine applies to code engines (e.g. 'PQ8,RFlat', " +
         "'IVF64,PQ8,RFlat', 'LSH32,RFlat', 'IVF64,SQ8,RFlat')")
       p2.copy(refine = true)
     } else p2
   }
 
-  /** Build from a factory description string (`Flat`, `HNSW32`,
-   *  `IVF256,Flat`, `DiskANN64,SQ8`, `PQ8,RFlat`, `IVF64,PQ8,RFlat`). */
   /** Coarse-graph degree from the `_HNSW<m>` form: an EXPLICIT m must be a
    *  usable graph degree (m ≥ 2 — same floor HnswIndex itself requires), so
    *  a user who wrote `IVF64_HNSW0` gets a parse error rather than a
@@ -311,12 +305,12 @@ object Ann {
       m.toInt
     }
 
+  /** Build from a factory description string (`Flat`, `HNSW32`,
+   *  `IVF256,Flat`, `DiskANN64,SQ8`, `PQ8,RFlat`, `IVF64,PQ8,RFlat`). */
   def buildIndexFactory(df: DataFrame, column: String, idColumn: String,
       name: String, factory: String,
       base: BuildParams = BuildParams()): IndexMeta =
     buildIndex(df, column, idColumn, name, parseFactory(factory, base))
-
-  private def sortableVec(c: Column): Column = c
 
   // ------------------------------------------------------------------ build
 
@@ -374,6 +368,7 @@ object Ann {
       return IndexCatalog.load(root(spark), name)
     }
     val metric = Metric.fromName(params.metric)
+    val kind = Engine(params.engine.toLowerCase)
     val dir = IndexCatalog.indexDir(root(spark), name)
     IndexCatalog.drop(root(spark), name)
     new java.io.File(dir).mkdirs()
@@ -389,9 +384,8 @@ object Ann {
     // the index neither knows nor cares a transform exists; queries map
     // through the same file in prepQuery.
     val (data, origDim, pcaPath, chainVariant) = if (params.pcaDim > 0) {
-      require(params.engine == "flat" || params.engine == "ivfflat" ||
-        params.engine == "ivfpq",
-        s"PCA pre-transform supports flat/ivfflat/ivfpq terminals (got ${params.engine})")
+      require(Seq(Engine.Flat, Engine.IvfFlat, Engine.IvfPq).contains(kind),
+        s"PCA pre-transform supports flat/ivfflat/ivfpq terminals (got $kind)")
       require(metric eq Metric.L2,
         "PCA pre-transform supports the l2 metric (centering shifts IP/cosine values)")
       import spark.implicits._
@@ -415,8 +409,8 @@ object Ann {
       // PCA-chain fold unchanged. Mean zero means no centering: rotations
       // preserve norms and dots, so the chain is metric-safe for
       // l2/ip/cosine (normalize∘rotate = rotate∘normalize).
-      require(params.engine == "ivfpq",
-        s"the OPQ chain form targets the ivfpq terminal (got ${params.engine})")
+      require(kind == Engine.IvfPq,
+        s"the OPQ chain form targets the ivfpq terminal (got $kind)")
       import spark.implicits._
       val inDim = inferDim(data0)
       val rot =
@@ -438,16 +432,14 @@ object Ann {
     } else (data0, 0, "", "")
 
     val srcFiles = sourceRootPaths(df)
-    val built = params.engine.toLowerCase match {
-      case "diskann" => buildGraph(data, name, dir, metric, params, "diskann")
-      case "hnsw"    => buildGraph(data, name, dir, metric, params, "hnsw")
-      case "flat"    => buildFlat(data, name, dir, metric, params)
-      case "ivfflat" => buildIvf(data, name, dir, metric, params)
-      case "pq"      => buildPq(data, name, dir, metric, params)
-      case "ivfpq"   => buildIvfPq(data, name, dir, metric, params)
-      case "ivfsq"   => buildIvfSq(data, name, dir, metric, params)
-      case "lsh"     => buildLsh(data, name, dir, metric, params)
-      case e => throw new IllegalArgumentException(s"unknown engine: $e")
+    val built = kind match {
+      case Engine.Diskann | Engine.Hnsw => buildGraph(data, name, dir, metric, params, kind)
+      case Engine.Flat    => buildFlat(data, name, dir, metric, params)
+      case Engine.IvfFlat => buildIvf(data, name, dir, metric, params)
+      case Engine.Pq      => buildPq(data, name, dir, metric, params)
+      case Engine.IvfPq   => buildIvfPq(data, name, dir, metric, params)
+      case Engine.IvfSq   => buildIvfSq(data, name, dir, metric, params)
+      case Engine.Lsh     => buildLsh(data, name, dir, metric, params)
     }
     // record the user-facing binding (original column names + source files)
     val bound = built.copy(column = column, idColumn = idColumn,
@@ -484,15 +476,48 @@ object Ann {
     row(0).getInt(0)
   }
 
+  /** How a graph engine's shards are built and written, shared by build,
+   *  append and vacuum: the graph constructor, the file format, and SQ
+   *  quantization of vamana shards (`quantBits` 0 = full precision). hnsw
+   *  reuses the (degree, complexity) slots for (m, efConstruction), as its
+   *  IndexMeta does. */
+  private final case class GraphShards(kind: Engine, dim: Int, metric: String,
+      degree: Int, complexity: Int, alpha: Float, quantBits: Int) {
+    def newIndex(): GraphIndex = kind match {
+      case Engine.Hnsw => new HnswIndex(dim, Metric.fromName(metric), degree, complexity)
+      case _ => new VamanaIndex(dim, Metric.fromName(metric), degree, complexity, alpha)
+    }
+    /** Writes `<stem>.diskann|.hnsw` plus the `<stem>.ids` sidecar. */
+    def write(ix: GraphIndex, stem: String, ids: Array[Long]): ShardMeta = {
+      val f = ix match {
+        case v: VamanaIndex =>
+          if (quantBits > 0) v.quantize(quantBits)
+          DiskannFormat.writeFile(v, s"$stem.diskann")
+          s"$stem.diskann"
+        case h: HnswIndex =>
+          HnswFormat.writeFile(h, s"$stem.hnsw")
+          s"$stem.hnsw"
+      }
+      IndexCatalog.writeIds(s"$stem.ids", ids)
+      ShardMeta(f, s"$stem.ids", ids.length.toLong)
+    }
+  }
+  private object GraphShards {
+    def of(meta: IndexMeta): GraphShards = GraphShards(meta.kind, meta.dim,
+      meta.metric, meta.maxDegree, meta.buildComplexity, meta.alpha,
+      if (meta.quantized) meta.quantBits else 0)
+  }
+
   private def buildGraph(data: DataFrame, name: String, dir: String,
-      metric: Metric, params: BuildParams, engine: String): IndexMeta = {
+      metric: Metric, params: BuildParams, kind: Engine): IndexMeta = {
     val spark = data.sparkSession
     import spark.implicits._
-    require(engine == "diskann" || params.quantization.isEmpty,
+    val hnsw = kind == Engine.Hnsw
+    require(!hnsw || params.quantization.isEmpty,
       "scalar quantization (sq8/sq4/sq6) is supported for the diskann engine only")
     require(Set("", "sq8", "sq4", "sq6")(params.quantization),
       s"unknown quantization '${params.quantization}' (supported: sq8, sq4, sq6)")
-    require(engine != "hnsw" || params.hnswM <= 8192,
+    require(!hnsw || params.hnswM <= 8192,
       s"hnsw m=${params.hnswM} exceeds the .hnsw format bound (8192)")
     val dim = inferDim(data)
     val n = data.count()
@@ -501,26 +526,23 @@ object Ann {
 
     val ds = data.as[(Long, Array[Float])]
     val repart = if (nShards == 1) ds.coalesce(1) else ds.repartition(nShards)
-    val maxDeg = params.maxDegree; val bc = params.buildComplexity
-    val alpha = params.alpha; val quant = params.quantization
-    val hnswM = params.hnswM; val efc = params.efConstruction
-    val metricName = metric.name
-    val ext = if (engine == "hnsw") "hnsw" else "diskann"
-    // escape hatch / A-B knob for the pilot-seeded insert order (captured
-    // driver-side so it reaches executor closures on a real cluster)
-    val pilotSeed = spark.conf.getOption("spark.graft.ann.pilotSeed")
-      .forall(_.toBoolean)
+    val quantBits =
+      if (params.quantization.isEmpty) 0 else params.quantization.stripPrefix("sq").toInt
+    // hnsw reuses the (maxDegree, buildComplexity) metadata slots for (m,
+    // efConstruction) — keeps metadata.json schema-stable across engines
+    val shards =
+      if (hnsw) GraphShards(kind, dim, metric.name, params.hnswM,
+        params.efConstruction, params.alpha, quantBits)
+      else GraphShards(kind, dim, metric.name, params.maxDegree,
+        params.buildComplexity, params.alpha, quantBits)
     val buildThreads = params.buildThreads
     val shardMetas = repart.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
-      val m = Metric.fromName(metricName)
       val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val ix: GraphIndex =
-        if (engine == "hnsw") new HnswIndex(dim, m, hnswM, efc)
-        else new VamanaIndex(dim, m, maxDeg, bc, alpha)
-      val normalize = m eq Metric.Cosine
+      val ix = shards.newIndex()
+      val normalize = ix.metric eq Metric.Cosine
       var bad = -1L
-      if (engine == "hnsw" && buildThreads > 1) {
+      if (hnsw && buildThreads > 1) {
         // deterministic batch-parallel bulk build (HnswIndex.addAll — the
         // same kernel the coarse-quantizer build uses): labels follow
         // arrival order exactly like the serial insert loop, so the
@@ -550,7 +572,7 @@ object Ann {
           }).get()
           finally pool.shutdown()
         }
-      } else if (engine == "hnsw" || !pilotSeed) {
+      } else if (hnsw) {
         // hnsw default: serial insertion — at full shard-axis parallelism
         // there are no idle cores for a per-shard pool to use
         it.foreach { case (id, v) =>
@@ -612,30 +634,13 @@ object Ann {
       if (bad >= 0) throw new IllegalArgumentException(
         s"vector for id $bad does not have expected dimension $dim")
       if (ix.size == 0) Iterator.empty
-      else {
-        val f = f"$dir/shard-$pid%05d.$ext"
-        val idsF = f"$dir/shard-$pid%05d.ids"
-        ix match {
-          case v: VamanaIndex =>
-            if (quant.nonEmpty) v.quantize(quant.stripPrefix("sq").toInt)
-            DiskannFormat.writeFile(v, f)
-          case h: HnswIndex => HnswFormat.writeFile(h, f)
-        }
-        IndexCatalog.writeIds(idsF, ids.toArray)
-        Iterator.single(ShardMeta(f, idsF, ids.length.toLong))
-      }
+      else Iterator.single(shards.write(ix, f"$dir/shard-$pid%05d", ids.toArray))
     }.collect().toList.sortBy(_.file)
 
-    // hnsw reuses the (maxDegree, buildComplexity) metadata slots for (m,
-    // efConstruction) — keeps metadata.json schema-stable across engines
-    val (md, bcMeta) =
-      if (engine == "hnsw") (params.hnswM, params.efConstruction)
-      else (params.maxDegree, params.buildComplexity)
-    val meta = IndexMeta(name, engine, "vec", "id", dim, metric.name,
-      md, bcMeta, params.alpha,
-      params.quantization.nonEmpty, shardMetas.map(_.count).sum, 0L, shardMetas,
-      quantBits = if (params.quantization.isEmpty) 8
-        else params.quantization.stripPrefix("sq").toInt)
+    val meta = IndexMeta(name, kind.name, "vec", "id", dim, metric.name,
+      shards.degree, shards.complexity, params.alpha,
+      quantBits > 0, shardMetas.map(_.count).sum, 0L, shardMetas,
+      quantBits = if (quantBits > 0) quantBits else 8)
     IndexCatalog.save(root(spark), meta)
     meta
   }
@@ -1051,18 +1056,6 @@ object Ann {
   }
 
   /**
-   * LSH build (FAISS `IndexLSH`, factory `LSH[nbits]`): encode every vector
-   * to an nbits-bit sign code against a fixed hyperplane set and land
-   * (id, code BIGINT) in parquet — 8 bytes/row at any dim, so the 100 TB
-   * scan reads codes only and the Hamming ranking is a single codegen'd
-   * `bit_count(code XOR qcode)` over the pruned two-column projection.
-   * `seedK > 0` seeds hyperplanes verbatim from the nbits lowest-id vectors
-   * (deterministic and SQL-replayable — the `ann_lsh_exact` oracle);
-   * otherwise fixed-seed Gaussian hyperplanes ([[LshCodec.randomHyperplanes]]).
-   * Like FAISS, encoding ignores the metric (signs are scale/normalization
-   * invariant).
-   */
-  /**
    * `IVF<nlist>,SQ8` build (FAISS IndexIVFScalarQuantizer with
    * by_residual=false): inverted lists over u8 scalar-quantized codes —
    * 4× vector compression with per-dim reconstruction far tighter than
@@ -1179,6 +1172,18 @@ object Ann {
     meta
   }
 
+  /**
+   * LSH build (FAISS `IndexLSH`, factory `LSH[nbits]`): encode every vector
+   * to an nbits-bit sign code against a fixed hyperplane set and land
+   * (id, code BIGINT) in parquet — 8 bytes/row at any dim, so the 100 TB
+   * scan reads codes only and the Hamming ranking is a single codegen'd
+   * `bit_count(code XOR qcode)` over the pruned two-column projection.
+   * `seedK > 0` seeds hyperplanes verbatim from the nbits lowest-id vectors
+   * (deterministic and SQL-replayable — the `ann_lsh_exact` oracle);
+   * otherwise fixed-seed Gaussian hyperplanes ([[LshCodec.randomHyperplanes]]).
+   * Like FAISS, encoding ignores the metric (signs are scale/normalization
+   * invariant).
+   */
   private def buildLsh(data: DataFrame, name: String, dir: String,
       metric: Metric, params: BuildParams): IndexMeta = {
     val spark = data.sparkSession
@@ -1372,15 +1377,26 @@ object Ann {
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
     val fetchK = k * math.max(1, oversample)
-    meta.engine match {
-      case e if isGraphEngine(e) =>
-        diskannScan(spark, meta, query, fetchK, searchComplexity, tomb)
-      case "flat" | "ivfflat" => exactScanIds(spark, meta, query, fetchK, tomb)
-      case "pq" => pqScanIds(spark, meta, query, fetchK, tomb)
-      case "ivfpq" => ivfPqScanIds(spark, meta, query, fetchK, tomb)
-      case "ivfsq" => ivfSqScanIds(spark, meta, query, fetchK, tomb)
-      case "lsh" => lshScanIds(spark, meta, query, fetchK, tomb)
-    }
+    if (meta.kind.graph) diskannScan(spark, meta, query, fetchK, searchComplexity, tomb)
+    else scanIds(spark, meta, query, fetchK, tomb)
+  }
+
+  /** Top-fetchK `(row_id, _distance)` scan of a parquet-table engine (every
+   *  engine but the graph ones). `extraFilter` splices an id predicate in
+   *  before the scoring projection, so it pushes to the parquet scan beside
+   *  the probe pruning; `nprobeOverride` (0 = meta.nprobe) widens the probe
+   *  set of coarse engines. */
+  private def scanIds(spark: SparkSession, meta: IndexMeta, query: Array[Float],
+      fetchK: Int, tomb: Set[Long], extraFilter: Option[Column] = None,
+      nprobeOverride: Int = 0): DataFrame = meta.kind.codes match {
+    case Engine.Codes.Raw =>
+      exactScanIds(spark, meta, query, fetchK, tomb, extraFilter, nprobeOverride)
+    case Engine.Codes.Pq if meta.kind.coarse =>
+      ivfPqScanIds(spark, meta, query, fetchK, tomb, extraFilter, nprobeOverride)
+    case Engine.Codes.Pq => pqScanIds(spark, meta, query, fetchK, tomb, extraFilter)
+    case Engine.Codes.Sq =>
+      ivfSqScanIds(spark, meta, query, fetchK, tomb, extraFilter, nprobeOverride)
+    case Engine.Codes.Lsh => lshScanIds(spark, meta, query, fetchK, tomb, extraFilter)
   }
 
   /** `IVF<n>,SQ8/SQ4/SQ6` top-k: probe-pruned parquet scan over scalar
@@ -1393,13 +1409,8 @@ object Ann {
       fetchK: Int, tomb: Set[Long], extraFilter: Option[Column] = None,
       nprobeOverride: Int = 0): DataFrame = {
     val query = prepQuery(meta, query0)
-    val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-    val cb = PqCodec.read(s"$dirPath/pq.bin")
-    val l2 = meta.metricObj eq Metric.L2
-    val nprobe = if (nprobeOverride > 0) nprobeOverride else meta.nprobe
-    val probes = selectProbes(cents, 0, query, nprobe, coarseProbe(spark, meta))
-    val lut = PqCodec.lut(cb, query, l2)
+    val cb = PqCodec.read(s"${IndexCatalog.indexDir(root(spark), meta.name)}/pq.bin")
+    val lut = PqCodec.lut(cb, query, meta.metricObj eq Metric.L2)
     val k = cb.k
     val bits = meta.quantBits
     val dim = meta.dim
@@ -1408,15 +1419,8 @@ object Ann {
       if (bits == 8) udf((code: Array[Byte]) => PqCodec.adc(lutB.value, k, code))
       else udf((code: Array[Byte]) =>
         graft.core.SqPackedCodec.adc(lutB.value, bits, dim, code))
-    val scan0 = probeFilter(spark.read.parquet(meta.sourcePath), probes.toSeq,
-      cents.length)
-    val base = extraFilter.fold(scan0)(scan0.where)
-      .select(col("id").as("row_id"), adcUdf(col("code")).as("__dd"))
-    val filtered = if (tomb.isEmpty) base
-      else base.where(notTombstoned(col("row_id"), tomb))
-    if (meta.refine) refineStage(spark, meta, filtered, query, fetchK)
-    else filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
-      .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
+    rankScan(spark, meta, probedScan(spark, meta, query, nprobeOverride),
+      adcUdf(col("code")), query, fetchK, tomb, extraFilter)
   }
 
   /** Trained per-bit thresholds for an lsh index built with the `t` suffix
@@ -1456,18 +1460,12 @@ object Ann {
     val hyps = IndexCatalog.readCentroids(
       s"${IndexCatalog.indexDir(root(spark), meta.name)}/hyperplanes.bin")
     val qcode = lshQueryCode(meta, hyps, query, lshThresholdsOf(spark, meta))
-    val scan0 = spark.read.parquet(meta.sourcePath)
-    val base = extraFilter.fold(scan0)(scan0.where)
-      .select(col("id").as("row_id"), hammingCol(col("code"), qcode).as("__dd"))
-    val filtered = if (tomb.isEmpty) base
-      else base.where(notTombstoned(col("row_id"), tomb))
     // RFlat: Hamming picks fetchK·refineFactor candidate IDS from the
     // codes-only projection; only those rows' vectors are fetched back and
     // re-ranked by the exact metric distance (same two-phase contract as
     // refined PQ — refineStage scaladoc)
-    if (meta.refine) refineStage(spark, meta, filtered, query, fetchK)
-    else filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
-      .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
+    rankScan(spark, meta, spark.read.parquet(meta.sourcePath),
+      hammingCol(col("code"), qcode), query, fetchK, tomb, extraFilter)
   }
 
   /** nprobe-pruned ADC scan over residual codes: per probed cluster the
@@ -1507,16 +1505,8 @@ object Ann {
     })
     val scan0 = probeFilter(spark.read.parquet(meta.sourcePath), probes.toSeq,
       cents.length)
-    // filtered search: the id predicate splices BEFORE the ADC projection
-    // and top-k, so it pushes to the parquet scan beside the probe pruning
-    val base = extraFilter.fold(scan0)(scan0.where)
-      .select(col("id").as("row_id"),
-        adcUdf(col("cluster").cast(IntegerType), col("code")).as("__dd"))
-    val filtered = if (tomb.isEmpty) base
-      else base.where(notTombstoned(col("row_id"), tomb))
-    if (meta.refine) refineStage(spark, meta, filtered, query, fetchK)
-    else filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
-      .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
+    rankScan(spark, meta, scan0, adcUdf(col("cluster").cast(IntegerType), col("code")),
+      query, fetchK, tomb, extraFilter)
   }
 
   /** OPQ rotation matrix (d rows of d floats; rotation.bin reuses the
@@ -1545,7 +1535,7 @@ object Ann {
     val candIds = scored.orderBy(col("__dd"), col("row_id"))
       .limit(fetchK * refineFactor(spark, meta))
       .select(col("row_id")).collect().map(_.getLong(0))
-    val exact = metricDistanceCol(meta.metricObj, col("vec"), query)
+    val exact = metricDistance(meta.metricObj, col("vec"), floatVec(query.toSeq))
     spark.read.parquet(meta.sourcePath)
       .where(col("id").isin(candIds.map(java.lang.Long.valueOf).toSeq: _*))
       .select(col("id").as("row_id"), exact.as("__ed"))
@@ -1559,21 +1549,14 @@ object Ann {
       fetchK: Int, tomb: Set[Long], extraFilter: Option[Column] = None): DataFrame = {
     val query = prepQuery(meta, query0)
     val cb = PqCodec.read(s"${IndexCatalog.indexDir(root(spark), meta.name)}/pq.bin")
-    // OPQ: ADC runs in rotated space — rotate the query once; the RFlat
-    // refine below re-ranks raw (unrotated) vectors with the UNROTATED query
-    val adcQuery = if (meta.opq) OpqCodec.rotate(readRotation(spark, meta), query) else query
-    val table = PqCodec.lut(cb, adcQuery, l2 = meta.metricObj eq Metric.L2)
+    // the RFlat refine below re-ranks raw (unrotated) vectors with the
+    // UNROTATED query
+    val table = PqCodec.lut(cb, adcQuery(spark, meta, query), l2 = meta.metricObj eq Metric.L2)
     val k = cb.k
     val tB = spark.sparkContext.broadcast(table)
     val adcUdf = udf((code: Array[Byte]) => PqCodec.adc(tB.value, k, code))
-    val scan0 = spark.read.parquet(meta.sourcePath)
-    val base = extraFilter.fold(scan0)(scan0.where)
-      .select(col("id").as("row_id"), adcUdf(col("code")).as("__dd"))
-    val filtered = if (tomb.isEmpty) base
-      else base.where(notTombstoned(col("row_id"), tomb))
-    if (meta.refine) refineStage(spark, meta, filtered, query, fetchK)
-    else filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
-      .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
+    rankScan(spark, meta, spark.read.parquet(meta.sourcePath), adcUdf(col("code")),
+      query, fetchK, tomb, extraFilter)
   }
 
   /** Max shard count for which a diskann search runs driver-local instead of
@@ -1637,7 +1620,7 @@ object Ann {
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
     val fetchK = k * math.max(1, oversample)
-    if (isGraphEngine(meta.engine) && meta.shards.size <= localSearchMaxShards(spark))
+    if (meta.kind.graph && meta.shards.size <= localSearchMaxShards(spark))
       searchShardsLocal(meta, tomb, query, fetchK, searchComplexity)
     else if (ExactServe.eligible(spark, meta))
       // small exact/quantized index: serve from the driver-local cache (one
@@ -1657,6 +1640,11 @@ object Ann {
    *  Full-dim PCA (inputDim == dim) is a pure rotation, which preserves L2
    *  distances, so the ball semantics hold and it stays allowed. */
   private def requireMetricSpaceRadius(meta: IndexMeta, op: String): Unit = {
+    // lsh ranks by Hamming distance between sign codes: a metric radius
+    // compared against it would answer a different question
+    require(meta.kind.metricDistances,
+      s"$op radius semantics require metric-space distances; ${meta.kind} index " +
+        s"'${meta.name}' scores by Hamming distance between sign codes.")
     require(meta.pcaFile.isEmpty || meta.inputDim == 0 || meta.inputDim == meta.dim,
       s"$op radius semantics require metric-space distances; reduced-dim PCA index " +
         s"'${meta.name}' (PCA ${meta.inputDim}->${meta.dim}) scores in lossy " +
@@ -1745,53 +1733,78 @@ object Ann {
 
   /** Exact scan for flat/ivfflat → (row_id, _distance), sorted, limit fetchK. */
   private def exactScanIds(spark: SparkSession, meta: IndexMeta, query0: Array[Float],
-      fetchK: Int, tomb: Set[Long]): DataFrame = {
+      fetchK: Int, tomb: Set[Long], extraFilter: Option[Column] = None,
+      nprobeOverride: Int = 0): DataFrame = {
     val query = prepQuery(meta, query0)
-    val distCol = metricDistanceCol(meta.metricObj, col("vec"), query)
-    val base = scanIvfOrFlat(spark, meta, query)
     // order in full double precision (near-ties must resolve identically to an
-    // exact oracle); surface the reference's FLOAT _distance afterwards
-    val unfiltered = base
-      .select(col("id").as("row_id"), distCol.as("__dd"))
-    val filtered = if (tomb.isEmpty) unfiltered
-      else unfiltered.where(notTombstoned(col("row_id"), tomb))
-    filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
+    // exact oracle); rankScan surfaces the reference's FLOAT _distance after
+    rankScan(spark, meta, probedScan(spark, meta, query, nprobeOverride),
+      metricDistance(meta.metricObj, col("vec"), floatVec(query.toSeq)),
+      query, fetchK, tomb, extraFilter)
+  }
+
+  /** Ranking tail of every table-engine scan: the filtered search's id
+   *  predicate splices in BEFORE the scoring projection and top-k, so it
+   *  pushes to the parquet scan beside the probe pruning; tombstones drop;
+   *  rows rank by (score, row_id) — or, for RFlat indexes, the scored
+   *  candidates go to [[refineStage]] with the prepped `query`. */
+  private def rankScan(spark: SparkSession, meta: IndexMeta, scan: DataFrame,
+      score: Column, query: Array[Float], fetchK: Int, tomb: Set[Long],
+      extraFilter: Option[Column]): DataFrame = {
+    val base = extraFilter.fold(scan)(scan.where)
+      .select(col("id").as("row_id"), score.as("__dd"))
+    val filtered = if (tomb.isEmpty) base
+      else base.where(notTombstoned(col("row_id"), tomb))
+    if (meta.refine) refineStage(spark, meta, filtered, query, fetchK)
+    else filtered.orderBy(col("__dd"), col("row_id")).limit(fetchK)
       .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
   }
 
   /**
-   * Scan for a radius query. flat: full scan. ivfflat + L2 with stored
-   * cluster radii: triangle-inequality pruning — cluster c can hold a
-   * member within √radius of q only if d(q, centroid_c) − r_c ≤ √radius —
-   * which keeps range search EXACT while skipping every cluster whose ball
-   * cannot intersect the query ball (the nprobe top-k heuristic would
-   * silently miss rows). The query-to-centroid distance accumulates in
-   * DOUBLE (error ~dim·2⁻⁵², provably below the 1e-6 relative slack at any
-   * realistic dim — the float kernel's ~dim·2⁻²⁴ would not be) and the
-   * stored radii are ulp-rounded-up double-accumulated upper bounds, so the
-   * slack strictly dominates all rounding; the per-row distance filter
-   * downstream is exact, so slack only ever over-probes. Metrics without a
-   * metric-space triangle
-   * inequality (IP; cosine's negated-dot surface) fall back to the nprobe
-   * probe set, matching top-k approximation semantics.
+   * Clusters whose ball can intersect the query ball of `radius` (squared
+   * L2) around q, by the triangle inequality: cluster c can hold a member
+   * within √radius of q only if d(q, centroid_c) − r_c ≤ √radius. This keeps
+   * range search EXACT while skipping every other cluster (the nprobe top-k
+   * heuristic would silently miss rows). The query-to-centroid distance
+   * accumulates in DOUBLE (error ~dim·2⁻⁵², provably below the 1e-6
+   * relative slack at any realistic dim — the float kernel's ~dim·2⁻²⁴
+   * would not be) and the stored radii are ulp-rounded-up
+   * double-accumulated upper bounds, so the slack strictly dominates all
+   * rounding; the per-row distance filter downstream is exact, so slack
+   * only ever over-probes.
    */
+  private def ballProbes(cents: Array[Array[Float]], radii: Array[Float],
+      q: Array[Float], radius: Float): Array[Int] = {
+    val rq = math.sqrt(math.max(0.0, radius.toDouble))
+    cents.indices.filter { c =>
+      math.sqrt(VectorOps.l2SqDoubleAcc(q, cents(c))) - radii(c) <= rq + 1e-6 * (1.0 + rq)
+    }.toArray
+  }
+
+  /** Stored per-cluster radii ([[clusterRadii]]; code-space for ivfsq) when
+   *  range queries can prune by [[ballProbes]]: a coarse engine under L2.
+   *  ivfpq writes none — its residual reconstructions straddle cluster
+   *  boundaries. Metrics without a metric-space triangle inequality (IP;
+   *  cosine's negated-dot surface) get None and fall back to the nprobe
+   *  probe set, matching top-k approximation semantics. */
+  private def ballRadii(spark: SparkSession, meta: IndexMeta): Option[Array[Float]] = {
+    val path = java.nio.file.Paths.get(
+      s"${IndexCatalog.indexDir(root(spark), meta.name)}/radii.bin")
+    if (meta.kind.coarse && (meta.metricObj eq Metric.L2) && java.nio.file.Files.exists(path))
+      Some(IndexCatalog.readRadii(path.toString))
+    else None
+  }
+
+  /** Scan for a radius query: pruned to [[ballProbes]] where [[ballRadii]]
+   *  exist, else the top-k scan ([[probedScan]]). */
   private def rangeScan(spark: SparkSession, meta: IndexMeta,
-      query: Array[Float], radius: Float): DataFrame = {
-    val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    val radiiPath = s"$dirPath/radii.bin"
-    if (meta.engine == "ivfflat" && (meta.metricObj eq Metric.L2) &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(radiiPath))) {
-      val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-      val radii = IndexCatalog.readRadii(radiiPath)
-      val rq = math.sqrt(math.max(0.0, radius.toDouble))
-      val keep = cents.indices.filter { c =>
-        val dc = math.sqrt(VectorOps.l2SqDoubleAcc(query, cents(c)))
-        dc - radii(c) <= rq + 1e-6 * (1.0 + rq)
-      }
-      probeFilter(spark.read.parquet(meta.sourcePath), keep, cents.length)
-    } else if (meta.engine == "ivfflat") {
-      scanIvfOrFlat(spark, meta, query)
-    } else spark.read.parquet(meta.sourcePath)
+      query: Array[Float], radius: Float): DataFrame = ballRadii(spark, meta) match {
+    case Some(radii) =>
+      val cents = IndexCatalog.readCentroids(
+        s"${IndexCatalog.indexDir(root(spark), meta.name)}/centroids.bin")
+      probeFilter(spark.read.parquet(meta.sourcePath),
+        ballProbes(cents, radii, query, radius).toSeq, cents.length)
+    case None => probedScan(spark, meta, query)
   }
 
   /** Above this nlist the per-cluster `partitionBy("cluster")` layout flips
@@ -1892,11 +1905,11 @@ object Ann {
     } else df.where(clusterIn(col("cluster"), ds))
   }
 
-  /** flat: full scan; ivfflat: nprobe-pruned partition scan. */
-  private def scanIvfOrFlat(spark: SparkSession, meta: IndexMeta,
+  /** Coarse engines: nprobe-pruned partition scan; others: full scan. */
+  private def probedScan(spark: SparkSession, meta: IndexMeta,
       query: Array[Float], nprobeOverride: Int = 0): DataFrame = {
     val df = spark.read.parquet(meta.sourcePath)
-    if (meta.engine == "ivfflat") {
+    if (meta.kind.coarse) {
       val nprobe = if (nprobeOverride > 0) nprobeOverride else meta.nprobe
       val cents = IndexCatalog.readCentroids(
         s"${IndexCatalog.indexDir(root(spark), meta.name)}/centroids.bin")
@@ -1905,13 +1918,14 @@ object Ann {
     } else df
   }
 
-  /** Whether to round-robin-rebalance the probed scan in the exact TABLE
-   *  paths. Per-task work there is sum(size(cluster) x probing-queries) —
-   *  a popularity-weighted product byte-based file bin-packing cannot see
-   *  (7.0x task skew at 1.5M vectors x 512 queries, AnnScaleSmoke; 3.3x
-   *  after rebalance). The extra exchange only pays off when the batch is
-   *  big enough that the compute stage dominates its cost AND the tail
-   *  matters, so it gates on the query block's estimated row count.
+  /** Whether [[probeJoin]] should round-robin-rebalance the probed scan in
+   *  the exact TABLE paths. Per-task work there is sum(size(cluster) x
+   *  probing-queries) — a popularity-weighted product byte-based file
+   *  bin-packing cannot see (7.0x task skew at 1.5M vectors x 512 queries,
+   *  AnnScaleSmoke; 3.3x after rebalance). The extra exchange only pays off
+   *  when the batch is big enough that the compute stage dominates its cost
+   *  AND the tail matters, so it gates on the query block's estimated row
+   *  count (≥ 64).
    *  Row count comes from CBO stats or the LocalRelation's own length
    *  before falling back to bytes/row-width: `ArrayType.defaultSize`
    *  counts a dim-float vector as 4 bytes, so a driver-built
@@ -1919,21 +1933,47 @@ object Ann {
    *  alone silently skipped the rebalance for in-memory query batches
    *  and left a 45x hot-cell task on the clustered 1.5M corpus (popular
    *  central cells bin-packed into one scan split). Few-query lookups
-   *  keep the direct cluster-pruned scan.
-   *  `spark.graft.ann.rebalanceProbedScan` force-overrides (true/false). */
-  private def rebalanceProbedScan(spark: SparkSession, queriesDf: DataFrame,
-      dim: Int): Boolean =
-    spark.conf.getOption("spark.graft.ann.rebalanceProbedScan") match {
-      case Some(v) => v.toBoolean
-      case None =>
-        val plan = queriesDf.queryExecution.optimizedPlan
-        val nQueries: BigInt = plan.stats.rowCount.getOrElse(plan match {
-          case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-            BigInt(l.data.length)
-          case _ => plan.stats.sizeInBytes / math.max(1, dim * 4)
-        })
-        nQueries >= 64
-    }
+   *  keep the direct cluster-pruned scan, where DPP cluster pruning is the
+   *  win. */
+  private def rebalanceProbedScan(queriesDf: DataFrame, dim: Int): Boolean = {
+    val plan = queriesDf.queryExecution.optimizedPlan
+    val nQueries: BigInt = plan.stats.rowCount.getOrElse(plan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        BigInt(l.data.length)
+      case _ => plan.stats.sizeInBytes / math.max(1, dim * 4)
+    })
+    nQueries >= 64
+  }
+
+  /** The index's centroid table as a broadcast. */
+  private def centroidsB(spark: SparkSession, meta: IndexMeta)
+      : org.apache.spark.broadcast.Broadcast[Array[Array[Float]]] =
+    spark.sparkContext.broadcast(IndexCatalog.readCentroids(
+      s"${IndexCatalog.indexDir(root(spark), meta.name)}/centroids.bin"))
+
+  /** Per-query nprobe probe set over `centsB` ([[selectProbes]]: IMI,
+   *  coarse-graph or exact selection), as an executor UDF. */
+  private def probesUdf(spark: SparkSession, meta: IndexMeta,
+      centsB: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]]) = {
+    val nprobe = meta.nprobe
+    val imiB = meta.imiB
+    val coarseB = coarseProbeBroadcast(spark, meta)
+    udf((q: Array[Float]) => selectProbes(centsB.value, imiB, q, nprobe,
+      if (coarseB == null) null else coarseB.value))
+  }
+
+  /** TABLE-path probe join: explode each query row's probe set (`probes`,
+   *  an INT array column) into `__probe` and equi-join the index scan on
+   *  the cluster column, optionally over a [[rebalanceProbedScan]]
+   *  round-robin of the scanned rows. Returns (scanned side, joined, probed
+   *  query side). */
+  private def probeJoin(base: DataFrame, queries: DataFrame, probes: Column,
+      rebalance: Boolean): (DataFrame, DataFrame, DataFrame) = {
+    val probed = queries.withColumn("__probe", explode(probes))
+    val stream = if (!rebalance) base
+      else base.repartition(base.sparkSession.sessionState.conf.numShufflePartitions)
+    (stream, stream.join(broadcast(probed), probeJoinCond(stream, probed("__probe"))), probed)
+  }
 
   /** Sequential double fold over float inputs — the exact accumulation of
    *  the Catalyst distance expressions (and ExactServe): squared L2, or the
@@ -1952,11 +1992,67 @@ object Ann {
   }
 
   /** Engine-semantics distance column: squared L2 / negated IP / negated cos. */
-  private def metricDistanceCol(metric: Metric, vec: Column, query: Array[Float]): Column = {
-    val q = graft.functions.floatVec(query.toSeq)
+  private def metricDistance(metric: Metric, vec: Column, q: Column): Column =
     metric match {
       case Metric.L2 => array_distance_sq(vec, q)
       case _ => array_negative_inner_product(vec, q) // IP & cosine (vecs normalized)
+    }
+
+  /** The prepped query in code space: plain-pq OPQ codes live in rotated
+   *  space, so their ADC query is rotated once; exact re-ranks keep the
+   *  unrotated query. */
+  private def adcQuery(spark: SparkSession, meta: IndexMeta,
+      query: Array[Float]): Array[Float] =
+    if (meta.opq) OpqCodec.rotate(readRotation(spark, meta), query) else query
+
+  /** Code-space range distance of `scan`'s `code` column to the query
+   *  column `q` (already in code space, [[adcQuery]]): the codegen'd
+   *  QuantRangeDist kernel decodes each row (+ its coarse centroid for
+   *  ivfpq residuals; sqDecode handles packed sub-byte ivfsq rows), then
+   *  folds the metric distance sequentially in double — the UDF formulation
+   *  broke the probe-pruned scan's whole-stage span. */
+  private def quantRangeDist(spark: SparkSession, meta: IndexMeta, scan: DataFrame,
+      q: Column): Column = {
+    val cbB = spark.sparkContext.broadcast(PqCodec.read(
+      s"${IndexCatalog.indexDir(root(spark), meta.name)}/pq.bin"))
+    val l2 = meta.metricObj eq Metric.L2
+    val residual = meta.kind == Engine.IvfPq
+    val state =
+      if (residual) new QuantRangeState(cbB, centroidsB(spark, meta), l2)
+      else new QuantRangeState(cbB, null, l2,
+        if (meta.kind.codes == Engine.Codes.Sq) meta.quantBits else 8)
+    val cluster = if (residual) scan("cluster").cast(IntegerType) else lit(-1)
+    graft.functions.mkCol(QuantRangeDist(graft.functions.mkExpr(scan("code")),
+      graft.functions.mkExpr(cluster), graft.functions.mkExpr(q), state))
+  }
+
+  /** Query-table prep shared by the table-engine TABLE paths: the user's
+   *  query column stays untouched (it is part of the output contract);
+   *  `__q` is the query as the index scores it — through the frozen
+   *  PCA/OPQ-chain transform FIRST, cosine-normalized AFTER. That is
+   *  prepQuery's float order: rotation preserves norms only in exact
+   *  arithmetic, so the other order would diverge from the single-query
+   *  path by an ulp at a cell boundary. Plain-pq OPQ indexes add `__qadc`,
+   *  `__q` rotated into code space ([[adcQuery]]). */
+  private def prepTableQueries(queriesDf: DataFrame, queryVecColumn: String,
+      meta: IndexMeta): DataFrame = {
+    val spark = queriesDf.sparkSession
+    val cosine = meta.metricObj eq Metric.Cosine
+    val v = col(queryVecColumn)
+    val qExpr =
+      if (meta.pcaFile.nonEmpty) {
+        val pcaB = spark.sparkContext.broadcast(graft.core.PcaCodec.cached(meta.pcaFile))
+        val tUdf = udf((x: Array[Float]) => pcaB.value.transform(x))
+        if (cosine) toFloatVec(normalizeCol(tUdf(v))) else tUdf(v)
+      } else if (cosine) toFloatVec(normalizeCol(v))
+      else v
+    val prepped = queriesDf.withColumn(queryVecColumn, toFloatVec(v))
+      .withColumn("__q", qExpr)
+    if (!meta.opq) prepped
+    else {
+      val rotB = spark.sparkContext.broadcast(readRotation(spark, meta))
+      val rotUdf = udf((x: Array[Float]) => OpqCodec.rotate(rotB.value, x))
+      prepped.withColumn("__qadc", rotUdf(col("__q")))
     }
   }
 
@@ -1987,6 +2083,14 @@ object Ann {
       .drop("__ann_rank")
   }
 
+  /** (row_id, _distance) LocalRelation over already-collected hit rows —
+   *  consumption is job-free, so a scan whose result was materialized for
+   *  an under-fill check is never re-executed. */
+  private def localHitRows(spark: SparkSession, rows: Array[Row]): DataFrame =
+    spark.createDataFrame(rows.toSeq.asJava,
+      StructType(Seq(StructField("row_id", LongType, nullable = false),
+        StructField("_distance", FloatType, nullable = false))))
+
   /**
    * Single-query serving surface: top k·oversample `(row_id, _distance)` as
    * a LOCAL relation — no Spark job anywhere on the path. The search itself
@@ -2003,20 +2107,10 @@ object Ann {
    * Falls back to a distributed scan + collect transparently for indexes
    * too large for the local routes.
    */
-  /** (row_id, _distance) LocalRelation over already-collected hit rows —
-   *  consumption is job-free, so a scan whose result was materialized for
-   *  an under-fill check is never re-executed. */
-  private def localHitRows(spark: SparkSession, rows: Array[Row]): DataFrame =
-    spark.createDataFrame(rows.toSeq.asJava,
-      StructType(Seq(StructField("row_id", LongType, nullable = false),
-        StructField("_distance", FloatType, nullable = false))))
-
   def searchHits(spark: SparkSession, name: String, query: Array[Float],
       k: Int, searchComplexity: Int = 0, oversample: Int = 1): DataFrame = {
     val hits = collectHits(spark, name, query, k, searchComplexity, oversample)
-    spark.createDataFrame(hits.toSeq.map(h => Row(h._1, h._2)).asJava,
-      StructType(Seq(StructField("row_id", LongType, nullable = false),
-        StructField("_distance", FloatType, nullable = false))))
+    localHitRows(spark, hits.map(h => Row(h._1, h._2)))
   }
 
   /**
@@ -2036,9 +2130,7 @@ object Ann {
       return searchFiltered(spark, name, query, k, filter, searchComplexity)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
     val hits = ExactServe.searchFiltered(spark, meta, tomb, query, k, filter.fn)
-    spark.createDataFrame(hits.toSeq.map(h => Row(h._1, h._2)).asJava,
-      StructType(Seq(StructField("row_id", LongType, nullable = false),
-        StructField("_distance", FloatType, nullable = false))))
+    localHitRows(spark, hits.map(h => Row(h._1, h._2)))
   }
 
   /** Row-id selector for filtered search: `column` is the predicate over
@@ -2187,57 +2279,25 @@ object Ann {
       k: Int, filter: IdFilter, searchComplexity: Int = 0): DataFrame = {
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
-    if (meta.engine == "pq" || meta.engine == "ivfpq" || meta.engine == "lsh" ||
-        meta.engine == "ivfsq") {
-      // quantized engines: the id predicate splices into the ADC/Hamming
-      // scan so the code compression survives (a raw-vector fallback would
-      // read the flat copy at 100 TB). The answer is the code-space top-k of
-      // the allowed subset — approximate exactly like unfiltered search,
-      // recall-gated by ann_filtered_ivfpq. IVFPQ under-fill escalates
-      // nprobe to nlist (FAISS IVF + IDSelector: selectivity does not widen
-      // the probe; the escalation is this library's saturation treatment);
-      // pq/lsh scan the full code table, so no escalation exists.
-      def topK(np: Int): DataFrame = {
-        val scored = meta.engine match {
-          case "pq" => pqScanIds(spark, meta, query0, k, tomb, Some(filter.column))
-          case "lsh" => lshScanIds(spark, meta, query0, k, tomb, Some(filter.column))
-          case "ivfsq" => ivfSqScanIds(spark, meta, query0, k, tomb,
-            Some(filter.column), np)
-          case _ => ivfPqScanIds(spark, meta, query0, k, tomb,
-            Some(filter.column), np)
-        }
-        scored.select(col("row_id"), col("_distance"))
-      }
+    if (!meta.kind.graph) {
+      // table engines: the id predicate splices into the scan before the
+      // top-k, so Catalyst pushes it to parquet and code engines keep their
+      // compression (a raw-vector fallback would read the flat copy at
+      // 100 TB). The answer is the exact (flat) or code-space top-k of the
+      // allowed subset within the probed clusters — FAISS IVF + IDSelector:
+      // selectivity does not widen the probe.
+      def topK(nprobeOverride: Int): DataFrame =
+        scanIds(spark, meta, query0, k, tomb, Some(filter.column), nprobeOverride)
+          .select(col("row_id"), col("_distance"))
       val probed = topK(0)
-      if ((meta.engine == "ivfpq" || meta.engine == "ivfsq") &&
-          meta.nprobe < meta.nlist) {
-        // under-fill check: collect the ≤ k probed rows ONCE and decide
-        // escalation from the local length — a count()-then-return would
-        // re-execute the probed scan when the caller consumes the result,
-        // doubling serving latency on the common non-escalating path
-        val rows = probed.collect()
-        if (rows.length < k) topK(meta.nlist) else localHitRows(spark, rows)
-      } else probed
-    } else if (!isGraphEngine(meta.engine)) {
-      val query = prepQuery(meta, query0)
-      val distCol = metricDistanceCol(meta.metricObj, col("vec"), query)
-      def topK(nprobeOverride: Int): DataFrame = {
-        val base = scanIvfOrFlat(spark, meta, query, nprobeOverride)
-          .where(filter.column)
-        val unfiltered = base.select(col("id").as("row_id"), distCol.as("__dd"))
-        val live = if (tomb.isEmpty) unfiltered
-          else unfiltered.where(notTombstoned(col("row_id"), tomb))
-        live.orderBy(col("__dd"), col("row_id")).limit(k)
-          .select(col("row_id"), col("__dd").cast(FloatType).as("_distance"))
-      }
-      val probed = topK(0)
-      // ivfflat nprobe saturation: a selective filter whose survivors live
-      // in unprobed clusters would silently under-fill — escalate to a full
-      // scan when the probed answer is short. The check collects the ≤ k
-      // probed rows once; non-escalating queries return them as a
-      // LocalRelation so the scan job runs exactly once per query
-      // (FilteredJobCountSpec pins this).
-      if (meta.engine == "ivfflat" && meta.nprobe < meta.nlist) {
+      // nprobe saturation: a selective filter whose survivors live in
+      // unprobed clusters would silently under-fill — escalate once to
+      // nprobe = nlist when the probed answer is short. The check collects
+      // the ≤ k probed rows once; a count()-then-return would re-execute
+      // the probed scan when the caller consumes the result, so
+      // non-escalating queries return them as a LocalRelation and the scan
+      // job runs exactly once per query (FilteredJobCountSpec pins this).
+      if (meta.kind.coarse && meta.nprobe < meta.nlist) {
         val rows = probed.collect()
         if (rows.length < k) topK(meta.nlist) else localHitRows(spark, rows)
       } else probed
@@ -2283,14 +2343,14 @@ object Ann {
    * cosine — same `_distance` column as [[search]]); the FAISS
    * `range_search` analog.
    *
-   * Exact engines answer with ONE distributed filter over the index
-   * parquet — no top-k heap, no driver collect; the radius predicate and
-   * two-column projection reach the scan, so at 100 TB this is a single
+   * Exact and quantized engines answer with ONE distributed filter over the
+   * index parquet — no top-k heap, no driver collect; the radius predicate
+   * and two-column projection reach the scan, so at 100 TB this is a single
    * pruned pass whose output can itself be huge without ever pooling on
-   * the driver. `ivfflat` prunes to the probed clusters (with
-   * nprobe < nlist the result is approximate exactly like top-k search).
+   * the driver. LSH indexes are rejected: Hamming distances have no metric
+   * radius.
    *
-   * Graph/quantized engines reuse the serving path with geometrically
+   * Graph engines reuse the serving path with geometrically
    * expanding k (64, 256, 1024, …). Termination contract: the loop stops
    * as soon as either (a) the k-th returned distance EXCEEDS the radius —
    * every in-radius hit the traversal can reach has been captured, because
@@ -2316,122 +2376,61 @@ object Ann {
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
     requireMetricSpaceRadius(meta, "rangeSearch")
-    meta.engine match {
-      case "flat" | "ivfflat" =>
-        val q = prepQuery(meta, query)
-        val base = rangeScan(spark, meta, q, radius)
-          .select(col("id").as("__ann_id"),
-            metricDistanceCol(meta.metricObj, col("vec"), q).as("__dd"))
-          .where(col("__dd") <= radius.toDouble)
-        val hits = (if (tomb.isEmpty) base
-          else base.where(notTombstoned(col("__ann_id"), tomb)))
-          .select(col("__ann_id"), col("__dd").cast(FloatType).as("_distance"))
-        // plain equi-join (not forced broadcast): a wide radius can match
-        // a large fraction of the base table; AQE broadcasts if small
-        df.join(hits, col(idColumn) === col("__ann_id"))
-          .drop("__ann_id")
-          .orderBy(col("_distance"), col(idColumn))
-      case "ivfsq" | "pq" | "ivfpq" =>
-        // Quantized range search (FAISS IndexIVFScalarQuantizer/IndexIVFPQ
-        // range_search analog): ONE distributed filter over the code table,
-        // no top-k heap, no driver pooling. `_distance` is the CODE-SPACE
-        // distance — the metric distance to the dequantized reconstruction,
-        // the only distance a quantized engine can know (FAISS likewise
-        // compares reconstructed distances against the radius) — computed
-        // in DOUBLE like the exact engines' range filter, so the radius
-        // decision follows the same convention the saturation oracle
-        // replays; the top-k path keeps its float ADC LUT. Scan pruning:
-        //  - pq: full code scan — exact in code space.
-        //  - ivfsq + L2: triangle-inequality pruning over radii.bin, which
-        //    buildIvfSq computes from the DEQUANTIZED reconstructions —
-        //    exact in code space at ANY nprobe, like the ivfflat range scan.
-        //  - ivfpq (and non-L2 ivfsq): the nprobe probe set — approximate
-        //    exactly like top-k; nprobe = nlist makes it exact in code
-        //    space. (IVFPQ residual reconstructions straddle cluster
-        //    boundaries, so exact pruning radii would need a build-time
-        //    decode pass; the honest nprobe semantics match FAISS's.)
-        // The RFlat refine flag does not apply here (FAISS IndexRefineFlat
-        // has no range_search either): refined indexes answer in code space.
-        val q0 = prepQuery(meta, query)
-        val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        // OPQ codes live in rotated space; rotate the query once (distances
-        // are rotation-invariant up to float rounding — code space anyway)
-        val q = if (meta.engine == "pq" && meta.opq)
-          OpqCodec.rotate(readRotation(spark, meta), q0) else q0
-        val l2 = meta.metricObj eq Metric.L2
-        val radiiPath = s"$dirPath/radii.bin"
-        val scan0 = spark.read.parquet(meta.sourcePath)
-        val scan = meta.engine match {
-          case "pq" => scan0
-          case "ivfsq" if l2 &&
-              java.nio.file.Files.exists(java.nio.file.Paths.get(radiiPath)) =>
-            val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-            val radii = IndexCatalog.readRadii(radiiPath)
-            val rq = math.sqrt(math.max(0.0, radius.toDouble))
-            val keep = cents.indices.filter { c =>
-              val dc = math.sqrt(VectorOps.l2SqDoubleAcc(q, cents(c)))
-              dc - radii(c) <= rq + 1e-6 * (1.0 + rq)
-            }
-            probeFilter(scan0, keep, cents.length)
-          case _ =>
-            val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-            val probes = selectProbes(cents, meta.imiB, q, meta.nprobe,
-              coarseProbe(spark, meta))
-            probeFilter(scan0, probes.toSeq, cents.length)
-        }
-        val cbB = spark.sparkContext.broadcast(cb)
-        // codegen'd reconstruction distance (QuantRangeDist): decode
-        // (+ centroid for ivfpq residuals; sqDecode handles packed sub-byte
-        // ivfsq rows), then the sequential double fold — the UDF
-        // formulation broke the probe-pruned scan's whole-stage span
-        val qCol = graft.functions.floatVec(q.toSeq)
-        val (state, clusterCol) =
-          if (meta.engine == "ivfpq")
-            (new QuantRangeState(cbB, spark.sparkContext.broadcast(
-              IndexCatalog.readCentroids(s"$dirPath/centroids.bin")), l2),
-              col("cluster").cast(IntegerType))
-          else
-            (new QuantRangeState(cbB, null, l2,
-              if (meta.engine == "ivfsq") meta.quantBits else 8), lit(-1))
-        val scored = scan.select(col("id").as("__ann_id"),
-          graft.functions.mkCol(QuantRangeDist(
-            graft.functions.mkExpr(col("code")),
-            graft.functions.mkExpr(clusterCol),
-            graft.functions.mkExpr(qCol), state)).as("__dd"))
-        val base = scored.where(col("__dd") <= radius.toDouble)
-        val hits = (if (tomb.isEmpty) base
-          else base.where(notTombstoned(col("__ann_id"), tomb)))
-          .select(col("__ann_id"), col("__dd").cast(FloatType).as("_distance"))
-        df.join(hits, col(idColumn) === col("__ann_id"))
-          .drop("__ann_id")
-          .orderBy(col("_distance"), col(idColumn))
-      case _ =>
-        var k = 64
-        var hits = collectHits(spark, name, query, k, searchComplexity, 1)
-        // grow until the tail clears the radius or the index is exhausted
-        while (hits.length >= k && hits.last._2 <= radius) {
-          k *= 4
-          hits = collectHits(spark, name, query, k, searchComplexity, 1)
-        }
-        val within = hits.filter(_._2 <= radius)
-        val distDf = spark.createDataFrame(within.toSeq.map(h =>
-            Row(h._1, h._2)).asJava,
-          StructType(Seq(StructField("__ann_id", LongType),
-            StructField("_distance", FloatType))))
-        // the inner join below already restricts to the hit ids; the isin
-        // only exists to PUSH that filter into the base scan, so it is
-        // gated like notTombstoned — a wide radius can return unbounded
-        // hit counts and a literal In list would blow up plan size
-        val fetched =
-          if (within.length <= TombInlineMax)
-            df.where(col(idColumn).isin(within.map(h =>
-              java.lang.Long.valueOf(h._1)).toSeq: _*))
-          else df
-        fetched
-          .join(broadcast(distDf), col(idColumn) === col("__ann_id"))
-          .drop("__ann_id")
-          .orderBy(col("_distance"), col(idColumn))
+    if (!meta.kind.graph) {
+      // Quantized engines (FAISS IndexIVFScalarQuantizer/IndexIVFPQ
+      // range_search analog) answer in CODE SPACE: `_distance` is the metric
+      // distance to the dequantized reconstruction, the only distance a
+      // quantized engine can know (FAISS likewise compares reconstructed
+      // distances against the radius), computed in DOUBLE like the exact
+      // engines' filter, so the radius decision follows the convention the
+      // saturation oracle replays; the top-k path keeps its float ADC LUT.
+      // rangeScan's pruning is exact for flat/pq (full scans) and, via
+      // stored radii, for L2 ivfflat/ivfsq at ANY nprobe; ivfpq and non-L2
+      // coarse engines use the nprobe probe set — approximate exactly like
+      // top-k, exact at nprobe = nlist. The RFlat refine flag does not apply
+      // (FAISS IndexRefineFlat has no range_search either).
+      val q = prepQuery(meta, query)
+      val scan = rangeScan(spark, meta, q, radius)
+      val dist =
+        if (meta.kind.codes == Engine.Codes.Raw)
+          metricDistance(meta.metricObj, col("vec"), floatVec(q.toSeq))
+        else quantRangeDist(spark, meta, scan, floatVec(adcQuery(spark, meta, q).toSeq))
+      val base = scan.select(col("id").as("__ann_id"), dist.as("__dd"))
+        .where(col("__dd") <= radius.toDouble)
+      val hits = (if (tomb.isEmpty) base
+        else base.where(notTombstoned(col("__ann_id"), tomb)))
+        .select(col("__ann_id"), col("__dd").cast(FloatType).as("_distance"))
+      // plain equi-join (not forced broadcast): a wide radius can match
+      // a large fraction of the base table; AQE broadcasts if small
+      df.join(hits, col(idColumn) === col("__ann_id"))
+        .drop("__ann_id")
+        .orderBy(col("_distance"), col(idColumn))
+    } else {
+      var k = 64
+      var hits = collectHits(spark, name, query, k, searchComplexity, 1)
+      // grow until the tail clears the radius or the index is exhausted
+      while (hits.length >= k && hits.last._2 <= radius) {
+        k *= 4
+        hits = collectHits(spark, name, query, k, searchComplexity, 1)
+      }
+      val within = hits.filter(_._2 <= radius)
+      val distDf = spark.createDataFrame(within.toSeq.map(h =>
+          Row(h._1, h._2)).asJava,
+        StructType(Seq(StructField("__ann_id", LongType),
+          StructField("_distance", FloatType))))
+      // the inner join below already restricts to the hit ids; the isin
+      // only exists to PUSH that filter into the base scan, so it is
+      // gated like notTombstoned — a wide radius can return unbounded
+      // hit counts and a literal In list would blow up plan size
+      val fetched =
+        if (within.length <= TombInlineMax)
+          df.where(col(idColumn).isin(within.map(h =>
+            java.lang.Long.valueOf(h._1)).toSeq: _*))
+        else df
+      fetched
+        .join(broadcast(distDf), col(idColumn) === col("__ann_id"))
+        .drop("__ann_id")
+        .orderBy(col("_distance"), col(idColumn))
     }
   }
 
@@ -2461,105 +2460,38 @@ object Ann {
     val spark = queriesDf.sparkSession
     val meta = IndexCatalog.load(root(spark), name)
     val tomb = IndexCatalog.readTombstones(root(spark), name)
-    require(meta.engine == "flat" || meta.engine == "ivfflat" ||
-      meta.engine == "pq" || meta.engine == "ivfpq" || meta.engine == "ivfsq" ||
-      isGraphEngine(meta.engine),
-      s"rangeSearchTable supports flat/ivfflat/pq/ivfpq/ivfsq/diskann/hnsw, " +
-        s"got ${meta.engine}")
     requireMetricSpaceRadius(meta, "rangeSearchTable")
-    if (isGraphEngine(meta.engine))
+    if (meta.kind.graph)
       return rangeSearchTableGraph(queriesDf, queryVecColumn, baseDf,
         idColumn, meta, radius, searchComplexity, tomb)
-    val cosine = meta.metricObj eq Metric.Cosine
-    val l2 = meta.metricObj eq Metric.L2
     // quantized engines answer in CODE SPACE — the metric distance to the
     // dequantized reconstruction, double-folded, exactly the single-query
-    // quantized range semantics (rangeSearch scaladoc): ivfsq + L2 prunes
-    // per query over the DEQUANTIZED cluster radii (exact in code space at
-    // any nprobe), ivfpq / non-L2 ivfsq fall back to the nprobe probe set,
-    // pq scans all codes.
-    val quant = meta.engine == "pq" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq"
-    val prepped = {
-      val base0 = queriesDf.withColumn(queryVecColumn, toFloatVec(col(queryVecColumn)))
-      // pca indexes: __q maps through the frozen transform. The PCA engines
-      // are L2-only, but OPQ-CHAIN ivfpq indexes store their rotation as
-      // pca.bin and DO allow cosine — transform FIRST, normalize AFTER,
-      // prepQuery's float order (rotation preserves norms only in exact
-      // arithmetic; the single-query path would otherwise diverge by an ulp
-      // at a cell boundary).
-      val qExpr =
-        if (meta.pcaFile.nonEmpty) {
-          val pcaB = spark.sparkContext.broadcast(graft.core.PcaCodec.cached(meta.pcaFile))
-          val tUdf = udf((v: Array[Float]) => pcaB.value.transform(v))
-          if (cosine) toFloatVec(normalizeCol(tUdf(col(queryVecColumn))))
-          else tUdf(col(queryVecColumn))
-        } else if (meta.engine == "pq" && meta.opq) {
-          // plain-pq OPQ codes live in rotated space: rotate each query once
-          // (after the cosine normalize, matching prepQuery-then-rotate)
-          val rotB = spark.sparkContext.broadcast(readRotation(spark, meta))
-          val rUdf = udf((v: Array[Float]) => OpqCodec.rotate(rotB.value, v))
-          if (cosine) rUdf(toFloatVec(normalizeCol(col(queryVecColumn))))
-          else rUdf(col(queryVecColumn))
-        }
-        else if (cosine) toFloatVec(normalizeCol(col(queryVecColumn)))
-        else col(queryVecColumn)
-      base0.withColumn("__q", qExpr)
-    }
+    // quantized range semantics (rangeSearch): ivfsq + L2 prunes per query
+    // over the DEQUANTIZED cluster radii (exact in code space at any
+    // nprobe), ivfpq / non-L2 ivfsq fall back to the nprobe probe set, pq
+    // scans all codes.
+    val prepped = prepTableQueries(queriesDf, queryVecColumn, meta)
     val base = spark.read.parquet(meta.sourcePath)
-    val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    val radiiPath = s"$dirPath/radii.bin"
     val joined: DataFrame =
-      if ((meta.engine == "ivfflat" || meta.engine == "ivfsq") && l2 &&
-          java.nio.file.Files.exists(java.nio.file.Paths.get(radiiPath))) {
-        val centsB = spark.sparkContext.broadcast(
-          IndexCatalog.readCentroids(s"$dirPath/centroids.bin"))
-        val radiiB = spark.sparkContext.broadcast(IndexCatalog.readRadii(radiiPath))
-        val rq = math.sqrt(math.max(0.0, radius.toDouble))
-        val keepUdf = udf((q: Array[Float]) => {
-          val cs = centsB.value; val rs = radiiB.value
-          cs.indices.filter { c =>
-            math.sqrt(VectorOps.l2SqDoubleAcc(q, cs(c))) - rs(c) <=
-              rq + 1e-6 * (1.0 + rq)
-          }.toArray
-        })
-        val qprobe = prepped.withColumn("__cluster", explode(keepUdf(col("__q"))))
-        base.join(broadcast(qprobe), probeJoinCond(base, qprobe("__cluster")))
-      } else if (meta.engine == "ivfflat" || meta.engine == "ivfpq" ||
-          meta.engine == "ivfsq") {
-        val centsB = spark.sparkContext.broadcast(
-          IndexCatalog.readCentroids(s"$dirPath/centroids.bin"))
-        val np = meta.nprobe
-        val imiB = meta.imiB
-        val coarseB = coarseProbeBroadcast(spark, meta)
-        val probesUdf = udf((q: Array[Float]) =>
-          selectProbes(centsB.value, imiB, q, np,
-            if (coarseB == null) null else coarseB.value))
-        val qprobe = prepped.withColumn("__cluster", explode(probesUdf(col("__q"))))
-        base.join(broadcast(qprobe), probeJoinCond(base, qprobe("__cluster")))
-      } else base.crossJoin(broadcast(prepped))
-    val distCol =
-      if (!quant) meta.metricObj match {
-        case Metric.L2 => array_distance_sq(base("vec"), col("__q"))
-        case _ => array_negative_inner_product(base("vec"), col("__q"))
-      } else {
-        // codegen'd reconstruction distance against the per-pair query
-        // column — rangeSearch's QuantRangeDist kernel with __q as the
-        // third child, keeping the broadcast-gemm stage in one span
-        val cbB = spark.sparkContext.broadcast(PqCodec.read(s"$dirPath/pq.bin"))
-        val (state, clusterCol) =
-          if (meta.engine == "ivfpq")
-            (new QuantRangeState(cbB, spark.sparkContext.broadcast(
-              IndexCatalog.readCentroids(s"$dirPath/centroids.bin")), l2),
-              base("cluster").cast(IntegerType))
-          else
-            (new QuantRangeState(cbB, null, l2,
-              if (meta.engine == "ivfsq") meta.quantBits else 8), lit(-1))
-        graft.functions.mkCol(QuantRangeDist(
-          graft.functions.mkExpr(base("code")),
-          graft.functions.mkExpr(clusterCol),
-          graft.functions.mkExpr(toFloatVec(col("__q"))), state))
+      if (!meta.kind.coarse) base.crossJoin(broadcast(prepped))
+      else {
+        val centsB = centroidsB(spark, meta)
+        val probes = ballRadii(spark, meta) match {
+          case Some(radii) =>
+            val radiiB = spark.sparkContext.broadcast(radii)
+            udf((q: Array[Float]) => ballProbes(centsB.value, radiiB.value, q, radius))
+          case None => probesUdf(spark, meta, centsB)
+        }
+        probeJoin(base, prepped, probes(col("__q")), rebalance = false)._2
       }
+    // the quantized score is rangeSearch's codegen'd QuantRangeDist kernel
+    // with the per-pair query column as its third child, keeping the
+    // broadcast-gemm stage in one span
+    val distCol =
+      if (meta.kind.codes == Engine.Codes.Raw)
+        metricDistance(meta.metricObj, base("vec"), col("__q"))
+      else quantRangeDist(spark, meta, base,
+        toFloatVec(col(if (meta.opq) "__qadc" else "__q")))
     val scored = joined
       .withColumn("__dd", distCol)
       .where(col("__dd") <= radius.toDouble)
@@ -2575,11 +2507,10 @@ object Ann {
   /**
    * Graph-engine (diskann/hnsw) TABLE-range search: the single-query
    * expanding-k beam loop ([[rangeSearch]]'s graph branch) run PER
-   * (query, shard) on the same (shard × query-block) task grid as
-   * [[searchTable]] — each cell's queries beam through one executor-cached
-   * shard, growing k geometrically (64, ×4) until the shard-local tail
-   * clears the radius or the shard is exhausted, then keep only in-radius
-   * hits. No per-query driver collect (the single-query path's expanding
+   * (query, shard) on the [[graphGrid]] shared with [[searchTable]] — each
+   * cell's queries beam through one executor-cached shard, growing k
+   * geometrically (64, ×4) until the shard-local tail clears the radius or
+   * the shard is exhausted, then keep only in-radius hits. No per-query driver collect (the single-query path's expanding
    * loop runs ON the driver once per query — fatal for a query TABLE), no
    * global top-k heap: the union of shard-local balls IS the answer, so
    * nothing pools anywhere.
@@ -2594,221 +2525,66 @@ object Ann {
   private def rangeSearchTableGraph(queriesDf: DataFrame, queryVecColumn: String,
       baseDf: DataFrame, idColumn: String, meta: IndexMeta, radius: Float,
       searchComplexity: Int, tomb: Set[Long]): DataFrame = {
-    val spark = queriesDf.sparkSession
-    val inSchema = queriesDf.schema
-    val shardsArr = meta.shards.toArray
-    val outSchema = StructType(inSchema.fields.toSeq :+
-      StructField("row_id", LongType) :+ StructField("_distance", FloatType))
-    if (shardsArr.isEmpty) {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], outSchema)
-      return joinBaseWithPrefix(baseDf, idColumn, empty,
-        inSchema.fieldNames.toSet)
-    }
-    val tombB = spark.sparkContext.broadcast(tomb)
-    val cosine = meta.metricObj eq Metric.Cosine
-    val nShards = shardsArr.length
+    val tombB = queriesDf.sparkSession.sparkContext.broadcast(tomb)
     val sc0 = searchComplexity
-    val dim = meta.dim
-    val vecIdx = inSchema.fieldIndex(queryVecColumn)
-    val metricName = meta.metric
     val rad = radius
-    val prepped = queriesDf.withColumn(queryVecColumn,
-      toFloatVec(col(queryVecColumn)))
-    // same stable-id + grid shuffle rationale as searchTable (there the id
-    // keys the per-query top-k re-merge; here it only balances blocks)
-    val qRdd = prepped.rdd.zipWithUniqueId()
-    val nBlocks = math.max(1, spark.sparkContext.defaultParallelism / nShards)
-    val keyed = qRdd.flatMap { case (row, qid) =>
-      val b = (qid % nBlocks).toInt
-      (0 until nShards).iterator.map(si => ((si, b), row))
-    }
-    val gridPartitioner = new org.apache.spark.Partitioner {
-      def numPartitions: Int = nShards * nBlocks
-      def getPartition(key: Any): Int = key match {
-        case (si: Int, b: Int) => si * nBlocks + b
+    val hits = graphGrid(queriesDf, queryVecColumn, meta) { (loaded, qs) =>
+      val t = tombB.value
+      val n = loaded.ids.length
+      qs.iterator.map { q =>
+        var fetch = math.min(math.max(1, n), 64)
+        var out: Seq[(Long, Float)] = Seq.empty
+        var done = n == 0
+        while (!done) {
+          val (labels, dists) = loaded.index.searchSaturationChecked(q,
+            fetch, math.max(sc0, fetch))
+          out = labels.indices.iterator
+            .map(i => (loaded.ids(labels(i)), dists(i)))
+            .filterNot { case (id, _) => t.contains(id) }.toSeq
+          // tail checked on the UNFILTERED beam: the k-th best distance
+          // in the shard clearing the radius bounds everything deeper,
+          // tombstoned or not
+          val tailClear = labels.nonEmpty &&
+            dists(labels.length - 1) > rad
+          if (tailClear || labels.length < fetch || fetch >= n) done = true
+          else fetch = math.min(n, fetch * 4)
+        }
+        out.iterator.filter(_._2 <= rad)
       }
     }
-    val hitsRdd = keyed.partitionBy(gridPartitioner).mapPartitions { it =>
-      val cell = it.toArray // one (shard, block) cell per task
-      if (cell.isEmpty) Iterator.empty
-      else {
-        val si = cell(0)._1._1
-        val sh = shardsArr(si)
-        val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-        val t = tombB.value
-        val m = Metric.fromName(metricName)
-        val n = loaded.ids.length
-        cell.iterator.map(_._2)
-          .filter(_.getSeq[Float](vecIdx).length == dim)
-          .flatMap { row =>
-            val raw = row.getSeq[Float](vecIdx).toArray
-            val q = if (m eq Metric.Cosine) VectorOps.normalize(raw) else raw
-            var fetch = math.min(math.max(1, n), 64)
-            var out: Seq[(Long, Float)] = Seq.empty
-            var done = n == 0
-            while (!done) {
-              val (labels, dists) = loaded.index.searchSaturationChecked(q,
-                fetch, math.max(sc0, fetch))
-              out = labels.indices.iterator
-                .map(i => (loaded.ids(labels(i)), dists(i)))
-                .filterNot { case (id, _) => t.contains(id) }.toSeq
-              // tail checked on the UNFILTERED beam: the k-th best distance
-              // in the shard clearing the radius bounds everything deeper,
-              // tombstoned or not
-              val tailClear = labels.nonEmpty &&
-                dists(labels.length - 1) > rad
-              if (tailClear || labels.length < fetch || fetch >= n) done = true
-              else fetch = math.min(n, fetch * 4)
-            }
-            out.iterator.filter(_._2 <= rad)
-              .map { case (id, d) => Row.fromSeq(row.toSeq :+ id :+ d) }
-          }
-      }
-    }
-    val hits = spark.createDataFrame(hitsRdd, outSchema)
-    joinBaseWithPrefix(baseDf, idColumn, hits, inSchema.fieldNames.toSet)
-  }
-
-  private implicit class SeqOps[T](s: Seq[T]) {
-    def asJava: java.util.List[T] = {
-      val l = new java.util.ArrayList[T](s.size)
-      s.foreach(l.add)
-      l
-    }
+    joinBaseWithPrefix(baseDf, idColumn, hits.drop("__qid"),
+      queriesDf.schema.fieldNames.toSet)
   }
 
   /**
-   * `ann_search_batch`: nq query vectors at once → query_idx INT + base
-   * columns + `_distance`, k rows per query (reference src/ann_search.cpp:202-388).
-   * Shard-parallel: every task searches its shard for all queries (the Spark
-   * analog of the reference's lock-step batch BFS).
+   * (shard × query-block) task grid shared by the graph-engine TABLE
+   * searches: every task holds ONE executor-cached shard and runs its query
+   * block against it, so no task ever needs more than one shard resident
+   * and the index can exceed executor memory. With fewer shards than cores
+   * the shard-only axis strands parallelism (8 shards on 32 cores = 24
+   * idle), so queries split into round-robin blocks until the grid covers
+   * the cluster; at high shard counts there is one block per shard.
+   * `searchCell(shard, queries)` returns each query's hits in order; the
+   * queries arrive cosine-normalized, and rows whose vector is not `dim`
+   * long are skipped. Output: `__qid` + input columns + `row_id` +
+   * `_distance`, `__qid` a stable per-input-row id.
    */
-  def searchBatch(df: DataFrame, idColumn: String, name: String,
-      queries: Seq[Array[Float]], k: Int, searchComplexity: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val meta = IndexCatalog.load(root(spark), name)
-    val tomb = IndexCatalog.readTombstones(root(spark), name)
-    val scored: DataFrame = meta.engine match {
-      case e if isGraphEngine(e) =>
-        val qArr = queries.map(prepQuery(meta, _)).toArray
-        val perShardK = k + tomb.size
-        val cosine = meta.metricObj eq Metric.Cosine
-        val tombB = spark.sparkContext.broadcast(tomb)
-        val qB = spark.sparkContext.broadcast(qArr)
-        val sc = searchComplexity
-        // (shard × query-block) task grid: with fewer shards than cores the
-        // shard-only axis strands parallelism (8 shards on 32 cores = 24
-        // idle), so queries split into round-robin blocks until the grid
-        // covers the cluster. Shards are executor-cached, so the extra
-        // shard touches amortize across the batch; at high shard counts
-        // nBlocks collapses to 1 and this reverts to shard-parallel.
-        val nShards = math.max(meta.shards.size, 1)
-        val nBlocks = math.max(1, math.min(qArr.length,
-          spark.sparkContext.defaultParallelism / nShards))
-        val grid = for (sh <- meta.shards; b <- 0 until nBlocks) yield (sh, b)
-        spark.sparkContext.parallelize(grid, math.max(grid.size, 1))
-          .flatMap { case (sh, b) =>
-            val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-            val t = tombB.value
-            // the block's queries advance in LOCK-STEP through the shard:
-            // each hop's candidate distances for all of them are one SIMD
-            // block (BeamSearcher.searchBatch) — bit-identical to per-query
-            // search, so the oracle contract is unchanged
-            val qis = qB.value.indices.filter(_ % nBlocks == b).toArray
-            val results =
-              loaded.index.searchBatchSaturationChecked(qis.map(qB.value(_)), perShardK, sc)
-            qis.iterator.zip(results.iterator).flatMap { case (qi, (labels, dists)) =>
-              labels.indices.iterator
-                .map(i => (qi, loaded.ids(labels(i)), dists(i)))
-                .filterNot { case (_, id, _) => t.contains(id) }
-            }
-          }.toDF("query_idx", "row_id", "_distance")
-      case _ =>
-        // exact/pq engines route through the broadcast gemm plan shared with
-        // searchTable: the queries become a small broadcast table scored
-        // against ONE base scan. A per-query plan union would grow the
-        // driver's analysis/codegen cost linearly in nq — fatal at nq in the
-        // thousands, where this stays a single fixed-size plan.
-        val qDim = if (meta.inputDim > 0) meta.inputDim else meta.dim
-        queries.foreach(q => require(q.length == qDim,
-          s"query dimension ${q.length} != index dimension $qDim"))
-        val qDf = spark.createDataFrame(
-          queries.zipWithIndex.map { case (q, qi) => Row(qi, q.toSeq) }.asJava,
-          StructType(Seq(StructField("query_idx", IntegerType),
-            StructField("__qvec", ArrayType(FloatType)))))
-        scoreTableExact(qDf, "__qvec", meta, k, tomb)
-          .select(col("query_idx"), col("row_id"), col("_distance"))
-    }
-    val w = Window.partitionBy("query_idx").orderBy(col("_distance"), col("row_id"))
-    val topPerQuery = scored.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k).drop("__rn")
-    joinBase(df, idColumn, topPerQuery, Seq("query_idx"))
-      .orderBy(col("query_idx"), col("_distance"), col(idColumn))
-  }
-
-  /**
-   * `ann_search_table`: DataFrame-input batch search — output = input columns
-   * + base columns (collisions prefixed `tbl_`) + `_distance`
-   * (reference src/ann_search.cpp:397-691).
-   *
-   * Graph engines run a (query-block × shard) task grid: every task holds ONE
-   * shard and lock-step-searches its query block against it, and a per-query
-   * window re-merges shard-local top-k into global top-k. No task ever needs
-   * more than one shard resident, so the index can exceed executor memory —
-   * shards spread across the cluster while query blocks keep all cores busy
-   * even at low shard counts.
-   */
-  /** First numeric-array column of `schema` — the reference's query-vector
-   *  auto-detection for TABLE inputs (src/ann_search.cpp:471-494: first LIST
-   *  or ARRAY column with FLOAT/DOUBLE/DECIMAL/integer child, schema order). */
-  def detectVectorColumn(schema: StructType): String =
-    schema.fields.collectFirst {
-      case f if (f.dataType match {
-        case ArrayType(et, _) =>
-          et.isInstanceOf[org.apache.spark.sql.types.NumericType]
-        case _ => false
-      }) => f.name
-    }.getOrElse(throw new IllegalArgumentException(
-      "ann_search_table: input table must have a numeric array column for query vectors"))
-
-  /** [[searchTable]] with the query-vector column auto-detected (reference
-   *  src/ann_search.cpp:471-494). */
-  def searchTable(queriesDf: DataFrame, baseDf: DataFrame,
-      idColumn: String, name: String, k: Int, searchComplexity: Int): DataFrame =
-    searchTable(queriesDf, detectVectorColumn(queriesDf.schema), baseDf,
-      idColumn, name, k, searchComplexity)
-
-  def searchTable(queriesDf: DataFrame, queryVecColumn: String, baseDf: DataFrame,
-      idColumn: String, name: String, k: Int, searchComplexity: Int = 0): DataFrame = {
+  private def graphGrid(queriesDf: DataFrame, queryVecColumn: String, meta: IndexMeta)(
+      searchCell: (LoadedShard, Array[Array[Float]]) => Iterator[Iterator[(Long, Float)]])
+      : DataFrame = {
     val spark = queriesDf.sparkSession
-    val meta = IndexCatalog.load(root(spark), name)
-    val tomb = IndexCatalog.readTombstones(root(spark), name)
-    if (!isGraphEngine(meta.engine))
-      return searchTableExact(queriesDf, queryVecColumn, baseDf, idColumn, meta, k, tomb)
-    val tombB = spark.sparkContext.broadcast(tomb)
-    val cosine = meta.metricObj eq Metric.Cosine
-    val shardsArr = meta.shards.toArray
-    if (shardsArr.isEmpty) {
-      // vacuum after deleting every row leaves a zero-shard index
-      val inSchema0 = queriesDf.schema
-      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(inSchema0.fields.toSeq :+
-          StructField("row_id", LongType) :+ StructField("_distance", FloatType)))
-      return joinBaseWithPrefix(baseDf, idColumn, empty, inSchema0.fieldNames.toSet)
-    }
-    val nShards = shardsArr.length
-    val perShardK = k + tomb.size
-    val sc = searchComplexity
-    val dim = meta.dim
     val inSchema = queriesDf.schema
-    val vecIdx = inSchema.fieldIndex(queryVecColumn)
     val outSchema = StructType(
       StructField("__qid", LongType) +: inSchema.fields.toSeq :+
       StructField("row_id", LongType) :+ StructField("_distance", FloatType))
-    val metricName = meta.metric
-
+    val shardsArr = meta.shards.toArray
+    val nShards = shardsArr.length
+    // vacuum after deleting every row leaves a zero-shard index
+    if (nShards == 0)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
+    val cosine = meta.metricObj eq Metric.Cosine
+    val dim = meta.dim
+    val vecIdx = inSchema.fieldIndex(queryVecColumn)
     val prepped = queriesDf.withColumn(queryVecColumn,
       toFloatVec(col(queryVecColumn)))
     // stable per-row id keys the per-query re-merge across the grid shuffle:
@@ -2832,39 +2608,151 @@ object Ann {
         case (si: Int, b: Int) => si * nBlocks + b
       }
     }
-    val scoredRdd = keyed.partitionBy(gridPartitioner).mapPartitions { it =>
+    val hitsRdd = keyed.partitionBy(gridPartitioner).mapPartitions { it =>
       val cell = it.toArray // one (shard, block) cell per task
       if (cell.isEmpty) Iterator.empty
       else {
-        val si = cell(0)._1._1
-        val sh = shardsArr(si)
+        val sh = shardsArr(cell(0)._1._1)
         val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
-        val t = tombB.value
-        val m = Metric.fromName(metricName)
         val valid = cell.iterator.map(_._2).filter { case (_, row) =>
           row.getSeq[Float](vecIdx).length == dim
         }.toArray
         val qs = valid.map { case (_, row) =>
           val raw = row.getSeq[Float](vecIdx).toArray
-          if (m eq Metric.Cosine) VectorOps.normalize(raw) else raw
+          if (cosine) VectorOps.normalize(raw) else raw
         }
-        // the block advances through this shard in lock-step (one SIMD
-        // block per hop) — bit-identical to per-query search
-        val results = loaded.index.searchBatchSaturationChecked(qs, perShardK, sc)
-        valid.iterator.zip(results.iterator).flatMap { case ((qid, row), (labels, dists)) =>
-          labels.indices.iterator
-            .map(i => (loaded.ids(labels(i)), dists(i)))
-            .filterNot { case (id, _) => t.contains(id) }
-            .map { case (id, d) => Row.fromSeq(qid +: row.toSeq :+ id :+ d) }
+        valid.iterator.zip(searchCell(loaded, qs)).flatMap { case ((qid, row), hits) =>
+          hits.map { case (id, d) => Row.fromSeq(qid +: row.toSeq :+ id :+ d) }
         }
       }
     }
-    val scored = spark.createDataFrame(scoredRdd, outSchema)
+    spark.createDataFrame(hitsRdd, outSchema)
+  }
+
+  /**
+   * `ann_search_batch`: nq query vectors at once → query_idx INT + base
+   * columns + `_distance`, k rows per query (reference src/ann_search.cpp:202-388).
+   * Shard-parallel: every task searches its shard for all queries (the Spark
+   * analog of the reference's lock-step batch BFS).
+   */
+  def searchBatch(df: DataFrame, idColumn: String, name: String,
+      queries: Seq[Array[Float]], k: Int, searchComplexity: Int = 0): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val meta = IndexCatalog.load(root(spark), name)
+    val tomb = IndexCatalog.readTombstones(root(spark), name)
+    val scored: DataFrame = if (meta.kind.graph) {
+      val qArr = queries.map(prepQuery(meta, _)).toArray
+      val perShardK = k + tomb.size
+      val cosine = meta.metricObj eq Metric.Cosine
+      val tombB = spark.sparkContext.broadcast(tomb)
+      val qB = spark.sparkContext.broadcast(qArr)
+      val sc = searchComplexity
+      // (shard × query-block) task grid: with fewer shards than cores the
+      // shard-only axis strands parallelism (8 shards on 32 cores = 24
+      // idle), so queries split into round-robin blocks until the grid
+      // covers the cluster. Shards are executor-cached, so the extra
+      // shard touches amortize across the batch; at high shard counts
+      // nBlocks collapses to 1 and this reverts to shard-parallel.
+      val nShards = math.max(meta.shards.size, 1)
+      val nBlocks = math.max(1, math.min(qArr.length,
+        spark.sparkContext.defaultParallelism / nShards))
+      val grid = for (sh <- meta.shards; b <- 0 until nBlocks) yield (sh, b)
+      spark.sparkContext.parallelize(grid, math.max(grid.size, 1))
+        .flatMap { case (sh, b) =>
+          val loaded = ShardCache.get(sh.file, sh.idsFile, cosine)
+          val t = tombB.value
+          // the block's queries advance in LOCK-STEP through the shard:
+          // each hop's candidate distances for all of them are one SIMD
+          // block (BeamSearcher.searchBatch) — bit-identical to per-query
+          // search, so the oracle contract is unchanged
+          val qis = qB.value.indices.filter(_ % nBlocks == b).toArray
+          val results =
+            loaded.index.searchBatchSaturationChecked(qis.map(qB.value(_)), perShardK, sc)
+          qis.iterator.zip(results.iterator).flatMap { case (qi, (labels, dists)) =>
+            labels.indices.iterator
+              .map(i => (qi, loaded.ids(labels(i)), dists(i)))
+              .filterNot { case (_, id, _) => t.contains(id) }
+          }
+        }.toDF("query_idx", "row_id", "_distance")
+    } else {
+      // exact/pq engines route through the broadcast gemm plan shared with
+      // searchTable: the queries become a small broadcast table scored
+      // against ONE base scan. A per-query plan union would grow the
+      // driver's analysis/codegen cost linearly in nq — fatal at nq in the
+      // thousands, where this stays a single fixed-size plan.
+      val qDim = if (meta.inputDim > 0) meta.inputDim else meta.dim
+      queries.foreach(q => require(q.length == qDim,
+        s"query dimension ${q.length} != index dimension $qDim"))
+      val qDf = spark.createDataFrame(
+        queries.zipWithIndex.map { case (q, qi) => Row(qi, q.toSeq) }.asJava,
+        StructType(Seq(StructField("query_idx", IntegerType),
+          StructField("__qvec", ArrayType(FloatType)))))
+      scoreTableExact(qDf, "__qvec", meta, k, tomb)
+        .select(col("query_idx"), col("row_id"), col("_distance"))
+    }
+    val w = Window.partitionBy("query_idx").orderBy(col("_distance"), col("row_id"))
+    val topPerQuery = scored.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= k).drop("__rn")
+    joinBase(df, idColumn, topPerQuery, Seq("query_idx"))
+      .orderBy(col("query_idx"), col("_distance"), col(idColumn))
+  }
+
+  /** First numeric-array column of `schema` — the reference's query-vector
+   *  auto-detection for TABLE inputs (src/ann_search.cpp:471-494: first LIST
+   *  or ARRAY column with FLOAT/DOUBLE/DECIMAL/integer child, schema order). */
+  def detectVectorColumn(schema: StructType): String =
+    schema.fields.collectFirst {
+      case f if (f.dataType match {
+        case ArrayType(et, _) =>
+          et.isInstanceOf[org.apache.spark.sql.types.NumericType]
+        case _ => false
+      }) => f.name
+    }.getOrElse(throw new IllegalArgumentException(
+      "ann_search_table: input table must have a numeric array column for query vectors"))
+
+  /** [[searchTable]] with the query-vector column auto-detected (reference
+   *  src/ann_search.cpp:471-494). */
+  def searchTable(queriesDf: DataFrame, baseDf: DataFrame,
+      idColumn: String, name: String, k: Int, searchComplexity: Int): DataFrame =
+    searchTable(queriesDf, detectVectorColumn(queriesDf.schema), baseDf,
+      idColumn, name, k, searchComplexity)
+
+  /**
+   * `ann_search_table`: DataFrame-input batch search — output = input columns
+   * + base columns (collisions prefixed `tbl_`) + `_distance`
+   * (reference src/ann_search.cpp:397-691).
+   *
+   * Graph engines run the [[graphGrid]]: every task lock-step-searches its
+   * query block against one shard, and a per-query window re-merges
+   * shard-local top-k into global top-k.
+   */
+  def searchTable(queriesDf: DataFrame, queryVecColumn: String, baseDf: DataFrame,
+      idColumn: String, name: String, k: Int, searchComplexity: Int = 0): DataFrame = {
+    val spark = queriesDf.sparkSession
+    val meta = IndexCatalog.load(root(spark), name)
+    val tomb = IndexCatalog.readTombstones(root(spark), name)
+    if (!meta.kind.graph)
+      return searchTableExact(queriesDf, queryVecColumn, baseDf, idColumn, meta, k, tomb)
+    val tombB = spark.sparkContext.broadcast(tomb)
+    val perShardK = k + tomb.size
+    val sc = searchComplexity
+    val scored = graphGrid(queriesDf, queryVecColumn, meta) { (loaded, qs) =>
+      val t = tombB.value
+      // the block advances through this shard in lock-step (one SIMD
+      // block per hop) — bit-identical to per-query search
+      loaded.index.searchBatchSaturationChecked(qs, perShardK, sc).iterator.map {
+        case (labels, dists) =>
+          labels.indices.iterator
+            .map(i => (loaded.ids(labels(i)), dists(i)))
+            .filterNot { case (id, _) => t.contains(id) }
+      }
+    }
     // global top-k per query from the ≤ nShards·perShardK shard-local hits
     val w = Window.partitionBy("__qid").orderBy(col("_distance"), col("row_id"))
     val topK = scored.withColumn("__rn", row_number().over(w))
       .where(col("__rn") <= k).drop("__rn", "__qid")
-    joinBaseWithPrefix(baseDf, idColumn, topK, inSchema.fieldNames.toSet)
+    joinBaseWithPrefix(baseDf, idColumn, topK, queriesDf.schema.fieldNames.toSet)
   }
 
   /**
@@ -2882,13 +2770,6 @@ object Ann {
     joinBaseWithPrefix(baseDf, idColumn, scored, queriesDf.schema.fieldNames.toSet)
   }
 
-  /** Broadcast-gemm exact scoring core shared by [[searchTableExact]] and the
-   *  exact-engine route of [[searchBatch]]: input columns + `row_id` +
-   *  `_distance`, ≤ k rows per input row. Rankings reproduce the single-query
-   *  scan paths bit-exactly: flat/ivfflat rank by the same double-precision
-   *  distance expression ([[exactScanIds]]); pq/ivfpq rank by the same float
-   *  ADC accumulation ([[pqScanIds]]/[[ivfPqScanIds]]), so near-float-ties
-   *  select the same rows whether a query arrives alone or in a batch. */
   /** Executor-JVM-wide ADC lookup-table cache for the TABLE-path quantized
    *  scores in [[scoreTableExact]], scoped per plan by a driver-issued
    *  token (captured in the scoring UDF's closure, so task retries see the
@@ -2953,39 +2834,20 @@ object Ann {
   }
   private val adcPlanTokens = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Broadcast-gemm exact scoring core shared by [[searchTableExact]] and the
+   *  exact-engine route of [[searchBatch]]: input columns + `row_id` +
+   *  `_distance`, ≤ k rows per input row. Rankings reproduce the single-query
+   *  scan paths bit-exactly: flat/ivfflat rank by the same double-precision
+   *  distance expression ([[exactScanIds]]); pq/ivfpq rank by the same float
+   *  ADC accumulation ([[pqScanIds]]/[[ivfPqScanIds]]), so near-float-ties
+   *  select the same rows whether a query arrives alone or in a batch. */
   private def scoreTableExact(queriesDf: DataFrame, queryVecColumn: String,
       meta: IndexMeta, k: Int, tomb: Set[Long]): DataFrame = {
     val spark = queriesDf.sparkSession
-    val cosine = meta.metricObj eq Metric.Cosine
     val l2 = meta.metricObj eq Metric.L2
     val inSchema = queriesDf.schema
     val dirPath = IndexCatalog.indexDir(root(spark), meta.name)
-    val prepped0 = {
-      val base0 = queriesDf.withColumn(queryVecColumn, toFloatVec(col(queryVecColumn)))
-      // pca indexes: __q is the frozen-transformed query — the USER's query
-      // column stays untouched, it is part of the output contract. The PCA
-      // engines are L2-only, but OPQ-chain ivfpq indexes store their
-      // rotation as pca.bin and DO allow cosine: transform FIRST, normalize
-      // AFTER (prepQuery's float order — see rangeSearchTable's twin note).
-      val qExpr =
-        if (meta.pcaFile.nonEmpty) {
-          val pcaB = spark.sparkContext.broadcast(graft.core.PcaCodec.cached(meta.pcaFile))
-          val tUdf = udf((v: Array[Float]) => pcaB.value.transform(v))
-          if (cosine) toFloatVec(normalizeCol(tUdf(col(queryVecColumn))))
-          else tUdf(col(queryVecColumn))
-        }
-        else if (cosine) toFloatVec(normalizeCol(col(queryVecColumn)))
-        else col(queryVecColumn)
-      base0.withColumn("__q", qExpr)
-    }
-    // OPQ (pq engine only): ADC runs in rotated space — rotate each query
-    // once on the broadcast side; exact re-ranks keep the unrotated `__q`
-    val prepped1 =
-      if (meta.opq) {
-        val rotB = spark.sparkContext.broadcast(readRotation(spark, meta))
-        val rotUdf = udf((v: Array[Float]) => OpqCodec.rotate(rotB.value, v))
-        prepped0.withColumn("__qadc", rotUdf(col("__q")))
-      } else prepped0
+    val prepped1 = prepTableQueries(queriesDf, queryVecColumn, meta)
     // __qid needs only uniqueness WITHIN the broadcast payload: each query
     // row and its qid travel together through the join, and the broadcast
     // side is computed exactly once per execution and reused by every
@@ -2993,9 +2855,9 @@ object Ann {
     // unlike rdd.zipWithIndex, stays fully lazy (ZippedWithIndexRDD runs a
     // partition-counting job the moment the RDD is built, which would make
     // even EXPLAIN over the batch TVFs execute the queries subtree and then
-    // compute it a second time at execution). The grid path in
-    // [[searchTable]] keys qids across a real shuffle and uses
-    // zipWithUniqueId instead — see its comment.
+    // compute it a second time at execution). The [[graphGrid]] keys qids
+    // across a real shuffle and uses zipWithUniqueId instead — see its
+    // comment.
     val prepped = prepped1.withColumn("__qid", monotonically_increasing_id())
     // pq/ivfpq only: FREEZE the (broadcast-small) query table at plan time —
     // one collect of the queries subtree, qids assigned by driver index, and
@@ -3021,10 +2883,7 @@ object Ann {
       val qArr: Array[Array[Float]] = rows.map(_.getSeq[Float](idx).toArray)
       (dfQ, spark.sparkContext.broadcast(qArr))
     }
-    def distTo(vc: Column, qc: Column): Column = meta.metricObj match {
-      case Metric.L2 => array_distance_sq(vc, qc)
-      case _ => array_negative_inner_product(vc, qc)
-    }
+    def distTo(vc: Column, qc: Column): Column = metricDistance(meta.metricObj, vc, qc)
     // all references to the index scan go through the DataFrame instance so
     // a query table that also has id/vec/cluster columns can't capture them
     val base = spark.read.parquet(meta.sourcePath)
@@ -3038,98 +2897,46 @@ object Ann {
     // 7.8 s for the ivfflat join of the same shape). The executor computes
     // each LUT once via [[AdcLutCache]]; the row carries only (__qid,
     // __probe) and the d-float query it already carries for re-ranking.
-    val (joined, rawScore, qSide, frozenOut): (DataFrame, Column, DataFrame, Option[DataFrame]) = meta.engine match {
-      case "pq" =>
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val cbB = spark.sparkContext.broadcast(cb)
+    val (joined, rawScore, qSide, frozenOut): (DataFrame, Column, DataFrame, Option[DataFrame]) = meta.kind.codes match {
+      case Engine.Codes.Pq | Engine.Codes.Sq =>
+        // per (query, probe) ADC inputs match the single-query scans: ivfpq
+        // L2 uses the residual (q − centroid) table with offset 0, IP/cosine
+        // reuse the query's own table with a −dot(q, centroid) offset; pq
+        // and ivfsq (codes quantize raw vectors, not residuals) resolve one
+        // probe-independent table per (query, plan) via probe = -1. Coarse
+        // engines probe-join on the cluster column (prunes when
+        // nprobe < nlist, degrades to a full cluster-partitioned scan
+        // otherwise); pq scores every code.
+        val cbB = spark.sparkContext.broadcast(PqCodec.read(s"$dirPath/pq.bin"))
+        val residual = meta.kind == Engine.IvfPq
+        val centsB = if (meta.kind.coarse) centroidsB(spark, meta) else null
         val token = adcPlanTokens.incrementAndGet()
-        val (frozen, qMapB) =
-          frozenQueries(if (meta.opq) "__qadc" else "__q")
-        val state = new AdcScoreState(cbB, null, qMapB, l2, token)
-        val score = graft.functions.mkCol(PqAdcScore(
-          graft.functions.mkExpr(col("__qid")),
-          graft.functions.mkExpr(lit(-1)),
-          graft.functions.mkExpr(base("code")), state))
-        (base.crossJoin(broadcast(frozen)), score, frozen, Some(frozen))
-      case "ivfpq" =>
-        // probe join on the cluster column (prunes when nprobe < nlist,
-        // degrades to a full cluster-partitioned scan otherwise); per
-        // (query, probe) ADC inputs match ivfPqScanIds: L2 uses the residual
-        // (q − centroid) table with offset 0, IP/cosine reuse the query's
-        // own table with a −dot(q, centroid) offset
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val cbB = spark.sparkContext.broadcast(cb)
-        val cbK = cb.k
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
-        val nprobe = meta.nprobe
-        val imiB = meta.imiB
-        val coarseB = coarseProbeBroadcast(spark, meta)
-        val token = adcPlanTokens.incrementAndGet()
-        val probeUdf = udf((v: Array[Float]) =>
-          selectProbes(centsB.value, imiB, v, nprobe,
-            if (coarseB == null) null else coarseB.value))
-        val (frozen, qMapB) = frozenQueries("__q")
-        val state = new AdcScoreState(cbB, centsB, qMapB, l2, token)
-        val probed = frozen.withColumn("__probe", explode(probeUdf(col("__q"))))
-        // same popularity-skew rebalance as the ivfflat probe join below
-        val stream = if (rebalanceProbedScan(spark, queriesDf, meta.dim))
-          base.repartition(spark.sessionState.conf.numShufflePartitions) else base
-        val score = graft.functions.mkCol(PqAdcScore(
-          graft.functions.mkExpr(col("__qid")),
-          graft.functions.mkExpr(col("__probe")),
-          graft.functions.mkExpr(stream("code")), state))
-        (stream.join(broadcast(probed), probeJoinCond(stream, probed("__probe"))),
-          score, probed, Some(frozen))
-      case "ivfsq" =>
-        // ivfpq's probe join for cluster pruning, but the score rides the
-        // probe-independent flat LUT (codes quantize raw vectors, not
-        // residuals): PqAdcScore with probe = -1 resolves one LUT per
-        // (query, plan) from the executor cache — same codegen span
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val cbB = spark.sparkContext.broadcast(cb)
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
-        val nprobe = meta.nprobe
-        val coarseB = coarseProbeBroadcast(spark, meta)
-        val token = adcPlanTokens.incrementAndGet()
-        val probeUdf = udf((v: Array[Float]) =>
-          selectProbes(centsB.value, 0, v, nprobe,
-            if (coarseB == null) null else coarseB.value))
-        val (frozen, qMapB) = frozenQueries("__q")
-        val state = new AdcScoreState(cbB, null, qMapB, l2, token, meta.quantBits)
-        val probed = frozen.withColumn("__probe", explode(probeUdf(col("__q"))))
-        val stream = if (rebalanceProbedScan(spark, queriesDf, meta.dim))
-          base.repartition(spark.sessionState.conf.numShufflePartitions) else base
-        val score = graft.functions.mkCol(PqAdcScore(
-          graft.functions.mkExpr(col("__qid")),
-          graft.functions.mkExpr(lit(-1)),
-          graft.functions.mkExpr(stream("code")), state))
-        (stream.join(broadcast(probed), probeJoinCond(stream, probed("__probe"))),
-          score, probed, Some(frozen))
-      case "ivfflat" if meta.nprobe < meta.nlist =>
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
-        val nprobe = meta.nprobe
-        val imiB = meta.imiB
-        val coarseB = coarseProbeBroadcast(spark, meta)
-        val probeUdf = udf((v: Array[Float]) =>
-          selectProbes(centsB.value, imiB, v, nprobe,
-            if (coarseB == null) null else coarseB.value))
-        val probed = prepped.withColumn("__probe", explode(probeUdf(col("__q"))))
-        // per-task work here is sum over the task's clusters of
-        // size(cluster) x queries-probing(cluster) — a popularity-weighted
-        // product the byte-based file bin-packing cannot see, which showed
-        // up as 7x task skew at 1.5M vectors x 512 queries (AnnScaleSmoke).
-        // A round-robin rebalance of the scanned rows equalizes it; the
-        // extra exchange moves only the base subset and is gated so
-        // small-query lookups (where DPP cluster pruning is the win) keep
-        // the direct scan.
-        val stream = if (rebalanceProbedScan(spark, queriesDf, meta.dim))
-          base.repartition(spark.sessionState.conf.numShufflePartitions) else base
-        (stream.join(broadcast(probed), probeJoinCond(stream, probed("__probe"))),
-          distTo(stream("vec"), col("__q")), probed, None)
-      case "lsh" =>
+        val (frozen, qMapB) = frozenQueries(if (meta.opq) "__qadc" else "__q")
+        val state = new AdcScoreState(cbB, if (residual) centsB else null, qMapB, l2,
+          token, if (meta.kind.codes == Engine.Codes.Sq) meta.quantBits else 8)
+        def score(scan: DataFrame, probe: Column): Column =
+          graft.functions.mkCol(PqAdcScore(
+            graft.functions.mkExpr(col("__qid")),
+            graft.functions.mkExpr(probe),
+            graft.functions.mkExpr(scan("code")), state))
+        if (!meta.kind.coarse)
+          (base.crossJoin(broadcast(frozen)), score(base, lit(-1)), frozen, Some(frozen))
+        else {
+          val (stream, joined, probed) = probeJoin(base, frozen,
+            probesUdf(spark, meta, centsB)(col("__q")),
+            rebalanceProbedScan(queriesDf, meta.dim))
+          (joined, score(stream, if (residual) col("__probe") else lit(-1)),
+            probed, Some(frozen))
+        }
+      case Engine.Codes.Raw if meta.kind.coarse && meta.nprobe < meta.nlist =>
+        val (stream, joined, probed) = probeJoin(base, prepped,
+          probesUdf(spark, meta, centroidsB(spark, meta))(col("__q")),
+          rebalanceProbedScan(queriesDf, meta.dim))
+        (joined, distTo(stream("vec"), col("__q")), probed, None)
+      case Engine.Codes.Raw =>
+        (base.crossJoin(broadcast(prepped)), distTo(base("vec"), col("__q")),
+          prepped, None)
+      case Engine.Codes.Lsh =>
         // batch Hamming rides the FROZEN-query route: queries collect once,
         // encode to one LONG code each on the driver, and the score is the
         // same codegen'd bit_count(XOR) the single-query scan ranks by. The
@@ -3157,9 +2964,6 @@ object Ann {
             .reduce(_ + _).cast(DoubleType)
           else bit_count(base("code").bitwiseXOR(col("__qcode"))).cast(DoubleType)
         (base.crossJoin(broadcast(frozen)), score, frozen, Some(frozen))
-      case _ =>
-        (base.crossJoin(broadcast(prepped)), distTo(base("vec"), col("__q")),
-          prepped, None)
     }
     val live0 = if (tomb.isEmpty) joined
       else joined.where(notTombstoned(base("id"), tomb))
@@ -3413,12 +3217,12 @@ object Ann {
     val q = if (m eq Metric.Cosine) VectorOps.normalize(query.clone()) else query
     val vec = toFloatVec(col(column))
     val dist = m match {
-      case Metric.L2 => array_distance_sq(vec, graft.functions.floatVec(q.toSeq))
+      case Metric.L2 => array_distance_sq(vec, floatVec(q.toSeq))
       case Metric.Cosine =>
         // cosine against unnormalized stored vectors: use cosine distance sign
         graft.functions.array_negative_inner_product(
-          graft.functions.toFloatVec(normalizeCol(vec)), graft.functions.floatVec(q.toSeq))
-      case _ => array_negative_inner_product(vec, graft.functions.floatVec(q.toSeq))
+          graft.functions.toFloatVec(normalizeCol(vec)), floatVec(q.toSeq))
+      case _ => array_negative_inner_product(vec, floatVec(q.toSeq))
     }
     df.withColumn("_distance", dist.cast(FloatType))
   }
@@ -3494,15 +3298,16 @@ object Ann {
       spark.read.parquet(meta.sourcePath)
         .where(pred)
         .select(col("id").as("row_id"), toFloatVec(col("vec")).as("vector"))
-    val out: DataFrame = meta.engine match {
-      // RFlat-refined code engines keep the raw vec column — reconstruct
-      // returns the refine storage exactly (FAISS IndexRefineFlat), so
-      // this arm must win over the unrefined-LSH reject below
-      case "pq" | "ivfpq" | "ivfsq" | "lsh" if meta.refine => fromStored()
-      case "lsh" => throw new IllegalArgumentException(
-        s"index '$name' is LSH: sign codes are not reconstructible " +
+    val out: DataFrame = meta.kind match {
+      // flat/ivfflat store the vectors; RFlat-refined code engines keep the
+      // raw vec column — reconstruct returns the refine storage exactly
+      // (FAISS IndexRefineFlat), so this arm must win over the
+      // unrefined-LSH reject below
+      case e if !e.graph && (e.codes == Engine.Codes.Raw || meta.refine) => fromStored()
+      case e if !e.reconstructs => throw new IllegalArgumentException(
+        s"index '$name' is $e: sign codes are not reconstructible " +
         "(FAISS IndexLSH has no reconstruct)")
-      case e if isGraphEngine(e) =>
+      case e if e.graph =>
         val cosine = meta.metricObj eq Metric.Cosine
         val keepB = spark.sparkContext.broadcast(keep)
         val shards = meta.shards
@@ -3514,8 +3319,7 @@ object Ann {
               case l if w(loaded.ids(l)) => (loaded.ids(l), loaded.index.vector(l))
             }
           }.toDF("row_id", "vector")
-      case "flat" | "ivfflat" => fromStored()
-      case "pq" =>
+      case Engine.Pq =>
         val cb = PqCodec.read(s"$dirPath/pq.bin")
         // OPQ stores codes in rotated space; reconstruct applies Rᵀ (the
         // inverse of the orthogonal rotation) to the decode
@@ -3532,11 +3336,9 @@ object Ann {
         spark.read.parquet(meta.sourcePath)
           .where(pred)
           .select(col("id").as("row_id"), dec(col("code")).as("vector"))
-      case "ivfpq" =>
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val cbB = spark.sparkContext.broadcast(cb)
-        val centsB = spark.sparkContext.broadcast(cents)
+      case Engine.IvfPq =>
+        val cbB = spark.sparkContext.broadcast(PqCodec.read(s"$dirPath/pq.bin"))
+        val centsB = centroidsB(spark, meta)
         val dec = udf((code: Array[Byte], cluster: Int) => {
           val r = PqCodec.decode(cbB.value, code)
           val c = centsB.value(cluster)
@@ -3548,7 +3350,7 @@ object Ann {
           .where(pred)
           .select(col("id").as("row_id"),
             dec(col("code"), col("cluster").cast(IntegerType)).as("vector"))
-      case "ivfsq" =>
+      case Engine.IvfSq =>
         val cb = PqCodec.read(s"$dirPath/pq.bin")
         val bits = meta.quantBits
         val cbB = spark.sparkContext.broadcast(cb)
@@ -3556,8 +3358,8 @@ object Ann {
         spark.read.parquet(meta.sourcePath)
           .where(pred)
           .select(col("id").as("row_id"), dec(col("code")).as("vector"))
-      case other => throw new IllegalArgumentException(
-        s"reconstruct: unsupported engine '$other' for index '$name'")
+      case e => throw new IllegalArgumentException(
+        s"reconstruct: unsupported engine '$e' for index '$name'")
     }
     // transform-chained indexes (PCA/PCAR/OPQ-chain) store vectors in the
     // rotated space; reconstruct maps them back through Rᵀ·y + mean —
@@ -3595,18 +3397,13 @@ object Ann {
     val spark = df.sparkSession
     val r = root(spark)
     val meta = IndexCatalog.load(r, name)
-    if (!isGraphEngine(meta.engine)) return appendExact(df, column, idColumn, meta)
+    if (!meta.kind.graph) return appendExact(df, column, idColumn, meta)
     val dir = IndexCatalog.indexDir(r, name)
     import spark.implicits._
     val dim = meta.dim
     val data = df.select(col(idColumn).cast(LongType), toFloatVec(col(column)))
       .as[(Long, Array[Float])]
-    val metricName = meta.metric
-    val engine = meta.engine
-    val maxDeg = meta.maxDegree; val bc = meta.buildComplexity; val alpha = meta.alpha
-    val quant = meta.quantized
-    val quantBits = meta.quantBits
-    val ext = if (engine == "hnsw") "hnsw" else "diskann"
+    val shards = GraphShards.of(meta)
     // Parallel delta build: a big batch splits into ceil(n/targetShardSize)
     // delta shards built concurrently — a single coalesce(1) task was the
     // streaming-ingest throughput ceiling (one thread serializing every
@@ -3622,29 +3419,16 @@ object Ann {
     val repart = if (nDelta == 1) data.coalesce(1) else data.repartition(nDelta)
     val newShards = repart.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
-      val m = Metric.fromName(metricName)
-      val ix: GraphIndex =
-        if (engine == "hnsw") new HnswIndex(dim, m, maxDeg, bc)
-        else new VamanaIndex(dim, m, maxDeg, bc, alpha)
+      val ix = shards.newIndex()
       val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val normalize = m eq Metric.Cosine
+      val normalize = ix.metric eq Metric.Cosine
       it.foreach { case (id, v) =>
         require(v.length == dim, s"vector for id $id has dimension ${v.length}, expected $dim")
         ix.add(if (normalize) VectorOps.normalize(v.clone()) else v)
         ids += id
       }
       if (ix.size == 0) Iterator.empty
-      else {
-        val f = f"$dir/shard-$deltaTag-$pid%05d.$ext"
-        ix match {
-          case vx: VamanaIndex =>
-            if (quant) vx.quantize(quantBits)
-            DiskannFormat.writeFile(vx, f)
-          case h: HnswIndex => HnswFormat.writeFile(h, f)
-        }
-        IndexCatalog.writeIds(f"$dir/shard-$deltaTag-$pid%05d.ids", ids.toArray)
-        Iterator.single(ShardMeta(f, f"$dir/shard-$deltaTag-$pid%05d.ids", ids.length.toLong))
-      }
+      else Iterator.single(shards.write(ix, f"$dir/shard-$deltaTag-$pid%05d", ids.toArray))
     }.collect().toList.sortBy(_.file)
     data.unpersist()
     val updated = meta.copy(shards = meta.shards ++ newShards,
@@ -3688,12 +3472,11 @@ object Ann {
     }
     val n = data.count()
     if (n == 0) return meta
-    meta.engine match {
-      case "flat" =>
+    meta.kind.codes match {
+      case Engine.Codes.Raw if !meta.kind.coarse =>
         data.write.mode("append").parquet(meta.sourcePath)
-      case "ivfflat" =>
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
+      case Engine.Codes.Raw =>
+        val centsB = centroidsB(spark, meta)
         val assignUdf = udf((v: Array[Float]) => KMeansLite.nearest(centsB.value, v))
         val clustered = data.withColumn("cluster", assignUdf(col("vec")))
         // writeClustered detects the existing table's layout on append, so
@@ -3709,7 +3492,7 @@ object Ann {
           IndexCatalog.writeRadii(radiiPath,
             Array.tabulate(old.length)(c => math.max(old(c), add(c))))
         }
-      case "pq" =>
+      case Engine.Codes.Pq if !meta.kind.coarse =>
         val cb = PqCodec.read(s"$dirPath/pq.bin")
         val cbB = spark.sparkContext.broadcast(cb)
         // frozen-codebook append (FAISS add()): OPQ indexes also keep the
@@ -3724,11 +3507,9 @@ object Ann {
           (if (meta.refine) Seq(col("vec")) else Nil) // data's vec is already prepped
         data.select(pqCols: _*)
           .write.mode("append").parquet(meta.sourcePath)
-      case "ivfpq" =>
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
-        val cb = PqCodec.read(s"$dirPath/pq.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
-        val cbB = spark.sparkContext.broadcast(cb)
+      case Engine.Codes.Pq =>
+        val centsB = centroidsB(spark, meta)
+        val cbB = spark.sparkContext.broadcast(PqCodec.read(s"$dirPath/pq.bin"))
         val assignUdf = udf((v: Array[Float]) => KMeansLite.nearest(centsB.value, v))
         val encodeUdf = udf((v: Array[Float], cluster: Int) => {
           val c = centsB.value(cluster)
@@ -3741,13 +3522,12 @@ object Ann {
           (if (meta.refine) Seq(col("vec")) else Nil) :+ col("cluster")
         writeClustered(data.withColumn("cluster", assignUdf(col("vec")))
           .select(ipqCols: _*), meta.nlist, meta.sourcePath, "append")
-      case "ivfsq" =>
+      case Engine.Codes.Sq =>
         // frozen-range append (FAISS add()): new rows quantize against the
         // build's per-dim min/scale from sq.bin — values outside the
         // trained range clamp, same as FAISS's trained ScalarQuantizer
-        val cents = IndexCatalog.readCentroids(s"$dirPath/centroids.bin")
         val sq = IndexCatalog.readCentroids(s"$dirPath/sq.bin")
-        val centsB = spark.sparkContext.broadcast(cents)
+        val centsB = centroidsB(spark, meta)
         val minsB = spark.sparkContext.broadcast(sq(0))
         val scalesB = spark.sparkContext.broadcast(sq(1))
         val assignUdf = udf((v: Array[Float]) => KMeansLite.nearest(centsB.value, v))
@@ -3773,7 +3553,7 @@ object Ann {
           IndexCatalog.writeRadii(radiiPath,
             Array.tabulate(old.length)(c => math.max(old(c), add(c))))
         }
-      case "lsh" =>
+      case Engine.Codes.Lsh =>
         // frozen-hyperplane append (FAISS add()): new rows encode against
         // the build's hyperplanes, exactly like the PQ frozen codebook
         val hyps = IndexCatalog.readCentroids(s"$dirPath/hyperplanes.bin")
@@ -3787,7 +3567,6 @@ object Ann {
           (if (meta.refine) Seq(col("vec")) else Nil) // data's vec is already prepped
         data.select(lshCols: _*)
           .write.mode("append").parquet(meta.sourcePath)
-      case e => throw new IllegalArgumentException(s"append: unknown engine $e")
     }
     val updated = meta.copy(numVectors = meta.numVectors + n)
     IndexCatalog.save(root(spark), updated)
@@ -3803,9 +3582,7 @@ object Ann {
   def setNprobe(spark: SparkSession, name: String, nprobe: Int): IndexMeta = {
     require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe)")
     val meta = IndexCatalog.load(root(spark), name)
-    require(meta.engine == "ivfflat" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq",
-      s"nprobe applies to IVF engines; '$name' is ${meta.engine}")
+    require(meta.kind.coarse, s"nprobe applies to IVF engines; '$name' is ${meta.engine}")
     val updated = meta.copy(nprobe = math.min(nprobe, meta.nlist))
     IndexCatalog.save(root(spark), updated)
     updated
@@ -3831,16 +3608,12 @@ object Ann {
     val meta = IndexCatalog.load(r, name)
     val tomb = IndexCatalog.readTombstones(r, name)
     if (tomb.isEmpty) return meta
-    if (!isGraphEngine(meta.engine)) return vacuumExact(spark, meta, tomb)
+    if (!meta.kind.graph) return vacuumExact(spark, meta, tomb)
     val dir = IndexCatalog.indexDir(r, name)
     val tombB = spark.sparkContext.broadcast(tomb)
     val cosine = meta.metricObj eq Metric.Cosine
     val ver = meta.version + 1
-    val engine = meta.engine
-    val maxDeg = meta.maxDegree; val bc = meta.buildComplexity; val alpha = meta.alpha
-    val quant = meta.quantized
-    val quantBits = meta.quantBits
-    val ext = if (engine == "hnsw") "hnsw" else "diskann"
+    val shards = GraphShards.of(meta)
     val newShards = spark.sparkContext
       .parallelize(meta.shards.zipWithIndex, math.max(meta.shards.size, 1))
       .flatMap { case (sh, i) =>
@@ -3849,22 +3622,10 @@ object Ann {
         val keep = loaded.ids.indices.filter(l => !t.contains(loaded.ids(l)))
         if (keep.isEmpty) Iterator.empty
         else {
-          val ix: GraphIndex =
-            if (engine == "hnsw")
-              new HnswIndex(loaded.index.dim, loaded.index.metric, maxDeg, bc)
-            else
-              new VamanaIndex(loaded.index.dim, loaded.index.metric, maxDeg, bc, alpha)
+          val ix = shards.newIndex()
           keep.foreach(l => ix.add(loaded.index.vector(l)))
-          val f = f"$dir/shard-$i%05d-v$ver.$ext"
-          val idsF = f"$dir/shard-$i%05d-v$ver.ids"
-          ix match {
-            case vx: VamanaIndex =>
-              if (quant) vx.quantize(quantBits)
-              DiskannFormat.writeFile(vx, f)
-            case h: HnswIndex => HnswFormat.writeFile(h, f)
-          }
-          IndexCatalog.writeIds(idsF, keep.map(loaded.ids(_)).toArray)
-          Iterator.single(ShardMeta(f, idsF, keep.size.toLong))
+          Iterator.single(shards.write(ix, f"$dir/shard-$i%05d-v$ver",
+            keep.map(loaded.ids(_)).toArray))
         }
       }.collect().toList
     meta.shards.foreach { sh =>
@@ -3899,7 +3660,7 @@ object Ann {
   def compactExact(spark: SparkSession, name: String): IndexMeta = {
     val r = root(spark)
     val meta = IndexCatalog.load(r, name)
-    require(!isGraphEngine(meta.engine),
+    require(!meta.kind.graph,
       s"compactExact applies to exact/quantized engines (got ${meta.engine}); " +
       "graph indexes compact via StreamingIndex.compact")
     rewriteExact(spark, meta, IndexCatalog.readTombstones(r, name))
@@ -3915,8 +3676,6 @@ object Ann {
     val newPath = s"$dir/data-v$ver"
     val df0 = spark.read.parquet(meta.sourcePath)
     val live = if (tomb.isEmpty) df0 else df0.where(notTombstoned(col("id"), tomb))
-    val ivf = meta.engine == "ivfflat" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq"
     val targetBytes = spark.conf.getOption("spark.graft.ann.compactTargetBytes")
       .map(_.toLong).getOrElse(128L << 20)
     val estBytes = dirBytes(new java.io.File(meta.sourcePath))
@@ -3925,7 +3684,7 @@ object Ann {
     // partition below MaxClusterDirs, bucketed above (drop the read-back
     // bucket partition column first; writeClustered re-derives it);
     // flat/pq: nFiles even splits
-    if (ivf) writeClustered(live.drop("bucket"), meta.nlist, newPath, "overwrite")
+    if (meta.kind.coarse) writeClustered(live.drop("bucket"), meta.nlist, newPath, "overwrite")
     else live.repartition(nFiles).write.mode("overwrite").parquet(newPath)
     val n = spark.read.parquet(newPath).count()
     // new data dir is complete — publish metadata atomically, then clean up
@@ -3950,11 +3709,11 @@ object Ann {
     val r = root(spark)
     val t = IndexCatalog.load(r, target)
     val s = IndexCatalog.load(r, source)
-    require((isGraphEngine(t.engine) || t.engine == "flat") && s.engine == t.engine,
+    require((t.kind.graph || t.kind == Engine.Flat) && s.kind == t.kind,
       s"merge supports graph or flat engines of matching type (got ${t.engine}/${s.engine})")
     require(t.dim == s.dim && t.metric == s.metric,
       s"incompatible indexes: ${t.dim}/${t.metric} vs ${s.dim}/${s.metric}")
-    if (t.engine == "flat") return mergeFlat(spark, r, t, s)
+    if (!t.kind.graph) return mergeFlat(spark, r, t, s)
     val tDir = new java.io.File(IndexCatalog.indexDir(r, target))
     val adopted = s.shards.zipWithIndex.map { case (sh, i) =>
       val srcExt = sh.file.substring(sh.file.lastIndexOf('.') + 1)

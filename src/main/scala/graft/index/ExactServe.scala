@@ -71,11 +71,11 @@ private[graft] object ExactServe {
     // indexes that cache the most
     val codeBytes: Long =
       if (!meta.refine) 0L
-      else meta.engine match {
-        case "pq" | "ivfpq" => meta.maxDegree.toLong // m bytes/row
-        case "ivfsq" => (meta.dim.toLong * meta.quantBits + 7) / 8
-        case "lsh" => ((meta.nlist + 63) / 64).toLong * 8
-        case _ => 0L
+      else meta.kind.codes match {
+        case Engine.Codes.Pq => meta.maxDegree.toLong // m bytes/row
+        case Engine.Codes.Sq => (meta.dim.toLong * meta.quantBits + 7) / 8
+        case Engine.Codes.Lsh => ((meta.nlist + 63) / 64).toLong * 8
+        case Engine.Codes.Raw => 0L
       }
     // side artifacts the cache also holds: the centroid table for IVF
     // engines, twice when an IVF_HNSW coarse graph rides along (graph
@@ -83,9 +83,7 @@ private[graft] object ExactServe {
     // of m·nlist ints, absorbed by the ×2)
     val sideBytes: Long =
       meta.nlist.toLong * meta.dim * 4 * (if (meta.coarseHnswM > 0) 2 else 1)
-    (meta.engine == "flat" || meta.engine == "ivfflat" ||
-     meta.engine == "pq" || meta.engine == "ivfpq" ||
-     meta.engine == "ivfsq" || meta.engine == "lsh") &&
+    !meta.kind.graph &&
       // OPQ is servable job-free since r17: the ADC query rotates through
       // the cached rotation matrix (Data.rot) exactly like the scan path
       meta.sourcePath.nonEmpty &&
@@ -113,11 +111,9 @@ private[graft] object ExactServe {
   }
 
   private def load(spark: SparkSession, meta: IndexMeta, fp: String): Data = {
-    val hasCluster = meta.engine == "ivfflat" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq"
-    val hasCodes = meta.engine == "pq" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq"
-    val isLsh = meta.engine == "lsh"
+    val hasCluster = meta.kind.coarse
+    val hasCodes = meta.kind.codes == Engine.Codes.Pq || meta.kind.codes == Engine.Codes.Sq
+    val isLsh = meta.kind.codes == Engine.Codes.Lsh
     val df = spark.read.parquet(meta.sourcePath)
     // refined pq/ivfpq/lsh: raw vecs ride along for the exact re-rank stage
     val cols = Seq(col("id").cast(LongType)) ++
@@ -150,7 +146,7 @@ private[graft] object ExactServe {
       // plain-pq OPQ: codes live in rotated space; the ADC query rotates
       // through the same stored matrix the distributed scan uses (the
       // refine re-rank stays UNROTATED, like refineStage)
-      rot = if (meta.engine == "pq" && meta.opq)
+      rot = if (meta.opq)
         IndexCatalog.readCentroids(s"$dirPath/rotation.bin") else null)
   }
 
@@ -237,7 +233,7 @@ private[graft] object ExactServe {
       // scan UDFs. ivfsq codes quantize RAW vectors (no residual), so its
       // LUT is probe-independent — the flat table with the probeSet filter
       val k = d.cb.k
-      val noResidual = meta.engine == "ivfsq"
+      val noResidual = meta.kind.codes == Engine.Codes.Sq
       // packed ivfsq rows (SQ4/SQ6) extract level indices inline; byte
       // codes take the PqCodec.adc fast path — float-identical to the scan
       val sqBits = if (noResidual) meta.quantBits else 8
@@ -315,9 +311,7 @@ private[graft] object ExactServe {
   def searchFiltered(spark: SparkSession, meta: IndexMeta, tomb: Set[Long],
       query0: Array[Float], k: Int, allow: Long => Boolean): Array[(Long, Float)] = {
     val probed = search(spark, meta, tomb, query0, k, allow)
-    val ivf = meta.engine == "ivfflat" || meta.engine == "ivfpq" ||
-      meta.engine == "ivfsq"
-    if (ivf && meta.nprobe < meta.nlist && probed.length < k)
+    if (meta.kind.coarse && meta.nprobe < meta.nlist && probed.length < k)
       search(spark, meta, tomb, query0, k, allow, nprobeOverride = meta.nlist)
     else probed
   }

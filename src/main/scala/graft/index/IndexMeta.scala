@@ -19,7 +19,7 @@ case class ShardMeta(file: String, idsFile: String, count: Long)
  */
 case class IndexMeta(
     name: String,
-    engine: String,               // "diskann" | "flat" | "ivfflat"
+    engine: String,               // an Engine name; typed view: `kind`
     column: String,
     idColumn: String,
     dim: Int,
@@ -84,6 +84,7 @@ case class IndexMeta(
     // SETS at nprobe < nlist may differ. 0 = exact probe selection.
     coarseHnswM: Int = 0) {
   def metricObj: graft.core.Metric = graft.core.Metric.fromName(metric)
+  @transient lazy val kind: Engine = Engine(engine)
 }
 
 object IndexCatalog {
@@ -110,7 +111,11 @@ object IndexCatalog {
   def load(root: String, name: String): IndexMeta = {
     val f = new File(s"${indexDir(root, name)}/metadata.json")
     require(f.isFile, s"ANN index '$name' not found under $root")
-    JsonMethods.parse(Files.readString(f.toPath)).extract[IndexMeta]
+    val meta = JsonMethods.parse(Files.readString(f.toPath)).extract[IndexMeta]
+    require(Engine.fromName(meta.engine).nonEmpty,
+      s"ANN index '$name' has unknown engine '${meta.engine}' in metadata.json " +
+        s"(supported: ${Engine.all.mkString(", ")})")
+    meta
   }
 
   def list(root: String): Seq[IndexMeta] = {

@@ -62,7 +62,7 @@ object StreamingIndex {
     import spark.implicits._
     val r = Ann.root(spark)
     val meta = IndexCatalog.load(r, name)
-    require(Ann.isGraphEngine(meta.engine), "compact supports graph engines")
+    require(meta.kind.graph, "compact supports graph engines")
     val tomb = IndexCatalog.readTombstones(r, name)
     val tombB = spark.sparkContext.broadcast(tomb)
     val cosine = meta.metricObj eq graft.core.Metric.Cosine

@@ -61,6 +61,17 @@ class LshSpec extends AnyFunSuite {
     }
   }
 
+  test("range search rejects LSH: a metric radius has no meaning over Hamming distances") {
+    Ann.buildIndexFactory(emb, "embedding", "vec_id", "lsh_range", "LSH16")
+    intercept[IllegalArgumentException] {
+      Ann.rangeSearch(emb, "vec_id", "lsh_range", q0, 10f).collect()
+    }
+    val queries = emb.orderBy("vec_id").limit(2).select("vec_id", "embedding")
+    intercept[IllegalArgumentException] {
+      Ann.rangeSearchTable(queries, "embedding", emb, "vec_id", "lsh_range", 10f).collect()
+    }
+  }
+
   test("trained mode: search == brute-force Hamming ranking over the deterministic hyperplanes") {
     Ann.buildIndexFactory(emb, "embedding", "vec_id", "lsh_t", "LSH32")
     val got = Ann.search(emb, "vec_id", "lsh_t", q0, 10)

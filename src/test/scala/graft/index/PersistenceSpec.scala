@@ -148,5 +148,18 @@ class PersistenceSpec extends AnyFunSuite {
     // catalog listing intact
     val names = Ann.list(s2).collect().map(_.getString(0)).toSet
     assert(Set("p_diskann", "p_sq8", "p_hnsw", "p_flat").subsetOf(names))
+    // metadata.json keeps the engine strings it always carried, and a
+    // load → typed engine → save round trip rewrites it byte for byte
+    for ((name, engine) <- Seq("p_diskann" -> "diskann", "p_sq8" -> "diskann",
+        "p_hnsw" -> "hnsw", "p_flat" -> "flat")) {
+      val path = java.nio.file.Paths.get(IndexCatalog.indexDir(root, name), "metadata.json")
+      val json = java.nio.file.Files.readString(path)
+      assert(("\"engine\"\\s*:\\s*\"" + engine + "\"").r.findFirstIn(json).nonEmpty,
+        s"$name metadata.json lost engine '$engine':\n$json")
+      val meta = IndexCatalog.load(root, name)
+      assert(meta.kind.name == engine)
+      IndexCatalog.save(root, meta)
+      assert(java.nio.file.Files.readString(path) == json, s"$name metadata.json changed")
+    }
   }
 }
